@@ -28,6 +28,7 @@ Semantics parity notes (vs /root/reference/src/ontoweaver/iterative.py):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, Window
@@ -51,6 +52,10 @@ PROPS_TYPE = "map<string,array<string>>"
 
 NODE_SCHEMA = f"id string, label string, properties {PROPS_TYPE}"
 EDGE_SCHEMA = f"id string, src string, dst string, label string, properties {PROPS_TYPE}"
+NODE_ARRAY_TYPE = f"array<struct<id:string,label:string,properties:{PROPS_TYPE}>>"
+EDGE_ARRAY_TYPE = (
+    f"array<struct<id:string,src:string,dst:string,label:string,properties:{PROPS_TYPE}>>"
+)
 
 
 def with_row_index(df: DataFrame, col_name: str = ROW_ID_COL) -> DataFrame:
@@ -135,9 +140,42 @@ def _branch_field(t: TransformerSpec, value: Column, field: str) -> Column:
 
 @dataclass
 class ExtractResult:
-    nodes: DataFrame  # id, label, properties map<string,array<string>>
-    edges: DataFrame  # id, src, dst, label, properties
+    """Raw (pre-fusion) extraction of one input frame.
+
+    ``nodes`` (id, label, properties map<string,array<string>>), ``edges``
+    (id, src, dst, label, properties) and ``elements`` are built on first
+    access, each as its own explode of the same assembled per-row arrays:
+    a consumer pays plan analysis only for the frames it reads, and column
+    pruning spares a node-only consumer the edge assembly. ``elements`` is
+    nodes and edges from ONE explode (id, src, dst, label, properties,
+    kind "node" | "edge"; src/dst NULL on nodes), for consumers that need
+    both, so the candidate assembly runs once per row, not twice."""
+
+    assembled: DataFrame  # one row per input row: _nodes, _edges arrays
     validation_report: object = None  # ValidationReport when validate_mode="report"
+
+    @cached_property
+    def nodes(self) -> DataFrame:
+        return self.assembled.select(F.explode("_nodes").alias("n")).select("n.*")
+
+    @cached_property
+    def edges(self) -> DataFrame:
+        return self.assembled.select(F.explode("_edges").alias("e")).select("e.*")
+
+    @cached_property
+    def elements(self) -> DataFrame:
+        return self.assembled.select(F.explode(F.concat(
+            F.transform("_nodes", lambda n: F.struct(
+                n["id"].alias("id"), _null_str().alias("src"), _null_str().alias("dst"),
+                n["label"].alias("label"), n["properties"].alias("properties"),
+                F.lit("node").alias("kind"),
+            )),
+            F.transform("_edges", lambda e: F.struct(
+                e["id"].alias("id"), e["src"].alias("src"), e["dst"].alias("dst"),
+                e["label"].alias("label"), e["properties"].alias("properties"),
+                F.lit("edge").alias("kind"),
+            )),
+        )).alias("x")).select("x.*")
 
 
 def _empty_props() -> Column:
@@ -412,13 +450,14 @@ def compile_mapping(
                 props_for(c["rev"]).alias("properties"),
             )
 
-        forward = F.transform(srcs, fwd)
-        reverse = F.transform(srcs, rev)
-        empty_f = F.slice(forward, 1, 0)
-        forward = F.when(c["edge"].isNotNull(), forward).otherwise(empty_f)
+        # typed empty literals, not slices of the built arrays: a slice
+        # would assemble every reverse edge (ids, property lookups) only
+        # to discard it whenever ``rev`` is NULL
+        none = F.array().cast(EDGE_ARRAY_TYPE)
+        forward = F.when(c["edge"].isNotNull(), F.transform(srcs, fwd)).otherwise(none)
         reverse = F.when(
-            c["edge"].isNotNull() & c["rev"].isNotNull(), reverse
-        ).otherwise(F.slice(reverse, 1, 0))
+            c["edge"].isNotNull() & c["rev"].isNotNull(), F.transform(srcs, rev)
+        ).otherwise(none)
         return F.concat(forward, reverse)
 
     all_edges = F.flatten(F.transform(candidates, mk_edges))
@@ -426,11 +465,9 @@ def compile_mapping(
     # invalid subject -> whole row skipped (iterative.py:255-330), expressed
     # as empty arrays so no Filter node exists for Catalyst to push down
     row_ok = sval.isNotNull() & sub_label.isNotNull()
-    all_nodes = F.when(row_ok, all_nodes).otherwise(F.slice(all_nodes, 1, 0))
-    all_edges = F.when(row_ok, all_edges).otherwise(F.slice(all_edges, 1, 0))
+    all_nodes = F.when(row_ok, all_nodes).otherwise(F.array().cast(NODE_ARRAY_TYPE))
+    all_edges = F.when(row_ok, all_edges).otherwise(F.array().cast(EDGE_ARRAY_TYPE))
 
     assembled = stage1.select(all_nodes.alias("_nodes"), all_edges.alias("_edges"))
 
-    nodes = assembled.select(F.explode("_nodes").alias("n")).select("n.*")
-    edges = assembled.select(F.explode("_edges").alias("e")).select("e.*")
-    return ExtractResult(nodes=nodes, edges=edges, validation_report=validation_report)
+    return ExtractResult(assembled=assembled, validation_report=validation_report)

@@ -3,17 +3,39 @@ with per-partition lineage + metrics and chunk-level resume.
 
 The reference funnels everything into BioCypher writers
 (/root/reference/src/ontoweaver/__init__.py:640-673) with no checkpointing;
-this module is the Spark-native analog required by the north rule:
+this module is the Spark-native analog required by the north rule. Every
+phase is ONE pass over its data; the manifest's counts are taken with
+``Observation``s on the writes that run anyway, never by re-scanning.
 
-- **Phase 1 (extract)** is a row-local flatMap, embarrassingly parallel: the
-  input is split into deterministic chunks (hash of a stable key); each
-  chunk's raw nodes/edges are written to a staging area and recorded in a
-  JSON manifest with lineage (input path, mapping hash, chunk id) and
-  metrics (rows in, nodes/edges out). A re-run skips chunks already in the
-  manifest — extraction work is never repeated after a crash.
-- **Phase 2 (fuse)** reads all staged chunks and runs the global
-  reconciliation, writing final nodes/edges parquet partitioned by label
-  (partition pruning for per-type consumers) plus a run manifest.
+- **Phase 0 (stage input, multi-chunk runs only).** The input is written
+  once to ``staging_input``, partitioned by chunk id (hash of a stable key),
+  so each chunk later reads only its own partition directory.
+- **Phase 1 (extract)** is a row-local flatMap, embarrassingly parallel.
+  Each chunk's subject nodes, object nodes and edges come out of a single
+  explode (``ExtractResult.elements``) and are written once, partitioned by
+  kind, to ``staging/chunk-<c>/kind={node,edge}``. The chunk is recorded in
+  a JSON manifest with lineage (input path, mapping hash, chunk id) and
+  metrics. A re-run skips chunks already in the manifest — extraction work
+  is never repeated after a crash.
+- **Phase 2 (fuse)** reads every ``staging/chunk-<c>/kind=node`` (and
+  ``kind=edge``) directory and runs the global reconciliation. The fused
+  nodes and the fused edges are written concurrently (two independent
+  jobs: the hub-skewed node reduce leaves cores the edge fusion uses) as
+  parquet partitioned by label (partition pruning for per-type consumers);
+  ``manifest["final"]`` is saved only once both writes succeed.
+
+Where each manifest count comes from:
+
+- ``validation`` (total/valid/invalid/per-rule): observed on the first
+  action that scans the raw input — the ``staging_input`` write when
+  ``n_chunks > 1``, else the chunk's extraction write;
+- ``chunks[c].rows_in`` and ``chunks[c].partitions``: observed on the
+  chunk's (validated) input rows inside the extraction write, as an exact
+  histogram of the pinned ``spark_partition_id()`` (:func:`partition_metrics`);
+- ``chunks[c].nodes`` / ``.edges`` (raw, pre-fusion): ``count_if`` on the
+  element kind, observed on the extraction write;
+- ``final.nodes`` / ``.edges`` and ``final.property_conflicts``: ``count``
+  and ``sum(has_property_conflict)`` observed on the two final writes.
 
 At cluster scale each phase is one spark-submit-able job; staging parquet
 plays the role of an Iceberg snapshot boundary.
@@ -24,15 +46,21 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler import EDGE_SCHEMA, NODE_SCHEMA, compile_mapping
-from .fusion import reconciliate
+from .fusion import has_property_conflict, reconciliate
 from .spec import MappingSpec, load_mapping
+
+#: staging layout tag recorded in ``extract_conf``: an out_dir staged under
+#: another layout (the former ``chunk-<c>/{nodes,edges}``) re-extracts
+#: instead of fusing from directories that are not there
+STAGING_LAYOUT = "elements"
 
 
 @dataclass
@@ -74,14 +102,52 @@ def _save_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
-def partition_metrics(df: DataFrame) -> list[dict]:
-    """Per-partition row counts (lineage metric; executed as one cheap job)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(F.count("*").alias("rows"))
-        .collect()
+def _observe_partitions(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach an observation of the per-partition row counts to ``df``.
+
+    ``observe`` rejects ``spark_partition_id()`` itself, so the id is pinned
+    to a column first. ``histogram_numeric`` over it is exact here: each
+    task contributes one id, far below the bin count."""
+    obs = Observation()
+    df = (
+        df.withColumn("_ow_pid", F.spark_partition_id())
+        .observe(obs, F.histogram_numeric("_ow_pid", F.lit(1 << 20)).alias("hist"))
+        .drop("_ow_pid")
     )
-    return [r.asDict() for r in rows]
+    return df, obs
+
+
+def partition_metrics(observed: dict) -> list[dict]:
+    """Per-partition row counts (lineage metric) from the values of an
+    :func:`_observe_partitions` observation; partitions without rows are
+    absent."""
+    return sorted(
+        ({"partition": int(b["x"]), "rows": int(b["y"])} for b in observed["hist"] or []),
+        key=lambda m: m["partition"],
+    )
+
+
+def _concurrently(*fns):
+    """Call each function in its own ``InheritableThread`` (the caller's job
+    group and local properties carry over) and return their results in
+    order. All threads are joined; then the first error raised is re-raised."""
+    results = [None] * len(fns)
+    errors = []
+
+    def run(i):
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised in the caller
+            errors.append(e)
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def _clear_orphan_location(spark: SparkSession, table: str) -> None:
@@ -247,7 +313,7 @@ def run_pipeline(
     extract_conf = {
         "mapping_hash": mhash, "affix": affix, "type_affix_sep": type_affix_sep,
         "n_chunks": n_chunks, "chunk_key": chunk_key,
-        "validate_mode": validate_mode,
+        "validate_mode": validate_mode, "staging": STAGING_LAYOUT,
     }
     prior = manifest.get("extract_conf") or (
         # legacy manifests keyed only on mapping_hash: treat as mismatched
@@ -263,29 +329,36 @@ def run_pipeline(
 
     todo = [c for c in range(n_chunks) if not manifest["chunks"].get(str(c), {}).get("done")]
 
-    # ---- phase 0: input validation (once, surfaced in the manifest) --------
+    # ---- input validation: counted on the first action that scans the input
+    validation = None  # Observation, until its counts reach the manifest
     if spec.input_rules and validate_mode == "report":
         # staged input was written from already-validated rows: a crash-resume
         # with chunks left must not re-scan the raw input just to recompute
         # counts the manifest already holds
         if todo and not manifest.get("input_staged"):
-            from .validate import validate_input
+            from .validate import validation_aggs, validity
 
-            input_df, vreport = validate_input(input_df, spec.input_rules)
-            manifest["validation"] = {
-                "total": vreport.total, "valid": vreport.valid,
-                "invalid": vreport.invalid, "per_rule": vreport.per_rule,
-            }
-        # else: fully-resumed run — the counts from the original pass are
-        # already in the manifest; recomputing them here would charge every
-        # resume a full input scan (100 TB) before the manifest is even read
+            validation = Observation()
+            input_df = input_df.observe(
+                validation, *validation_aggs(spec.input_rules)
+            ).where(validity(spec.input_rules))
         # rules already applied (or nothing left to extract); chunks compile
         # with a plain filter (no-op)
         chunk_validate_mode = "filter"
     else:
         chunk_validate_mode = validate_mode
 
-    # ---- phase 1: chunked extraction with resume ---------------------------
+    def record_validation():
+        # call only after the action carrying the observation has succeeded
+        nonlocal validation
+        if validation is not None:
+            from .validate import ValidationReport
+
+            manifest["validation"] = asdict(ValidationReport.from_row(
+                validation.get, spec.input_rules))
+            validation = None
+
+    # ---- phase 0 / 1: chunked extraction with resume ---------------------------
     # Multi-chunk runs stage the input ONCE, written partitioned by chunk id
     # (one full input scan total). Each chunk's extraction then reads only
     # its own partition directory (partition pruning) — the previous
@@ -300,14 +373,13 @@ def run_pipeline(
                 .withColumn("_ow_chunk", F.pmod(F.xxhash64(key), F.lit(n_chunks)))
                 .write.mode("overwrite").partitionBy("_ow_chunk").parquet(stage_in)
             )
+            record_validation()
             manifest["input_staged"] = True
             _save_manifest(out_dir, manifest)
         staged_input = spark.read.parquet(stage_in)
 
     for chunk in range(n_chunks):
         ckey = str(chunk)
-        node_path = os.path.join(staging, f"chunk-{chunk}", "nodes")
-        edge_path = os.path.join(staging, f"chunk-{chunk}", "edges")
         if manifest["chunks"].get(ckey, {}).get("done"):
             report.chunks_resumed += 1
             continue
@@ -316,25 +388,31 @@ def run_pipeline(
             part = staged_input.where(F.col("_ow_chunk") == chunk).drop("_ow_chunk")
         else:
             part = input_df
+        part, rows_obs = _observe_partitions(part)
 
         res = compile_mapping(
             part, spec, affix=affix, type_affix_sep=type_affix_sep,
             validate_mode=chunk_validate_mode,
         )
-        res.nodes.write.mode("overwrite").parquet(node_path)
-        res.edges.write.mode("overwrite").parquet(edge_path)
-
-        pm = partition_metrics(part)
-        n_rows = sum(m["rows"] for m in pm)
-        # explicit schemas: an edge-less mapping writes an EMPTY parquet
-        # directory whose schema cannot be inferred back
-        n_nodes = spark.read.schema(NODE_SCHEMA).parquet(node_path).count()
-        n_edges = spark.read.schema(EDGE_SCHEMA).parquet(edge_path).count()
+        kinds = Observation()
+        kind = F.col("kind")
+        (
+            res.elements.observe(
+                kinds,
+                F.count_if(kind == "node").alias("nodes"),
+                F.count_if(kind == "edge").alias("edges"),
+            )
+            .write.mode("overwrite").partitionBy("kind")
+            .parquet(os.path.join(staging, f"chunk-{chunk}"))
+        )
+        record_validation()
+        pm = partition_metrics(rows_obs.get)
+        counts = kinds.get
         manifest["chunks"][ckey] = {
             "done": True,
-            "rows_in": n_rows,
-            "nodes": n_nodes,
-            "edges": n_edges,
+            "rows_in": sum(m["rows"] for m in pm),
+            "nodes": counts["nodes"],
+            "edges": counts["edges"],
             "partitions": pm,
             "lineage": {**extract_conf, "chunk": chunk},
             "ts": time.time(),
@@ -378,10 +456,24 @@ def run_pipeline(
         report.seconds = time.time() - t0
         return report
 
-    node_paths = [os.path.join(staging, f"chunk-{c}", "nodes") for c in range(n_chunks)]
-    edge_paths = [os.path.join(staging, f"chunk-{c}", "edges") for c in range(n_chunks)]
-    raw_nodes = spark.read.schema(NODE_SCHEMA).parquet(*node_paths)
-    raw_edges = spark.read.schema(EDGE_SCHEMA).parquet(*edge_paths)
+    if final is not None:
+        # the final tables are about to be overwritten: until both writes
+        # succeed there is no snapshot a rerun could reuse
+        manifest["final"] = None
+        _save_manifest(out_dir, manifest)
+
+    def staged(kind: str, schema: str) -> DataFrame:
+        # one leaf directory per chunk, read with an explicit schema (no
+        # partition discovery across chunk roots); a kind no chunk produced
+        # (an edge-less mapping) has no directory at all
+        paths = [os.path.join(staging, f"chunk-{c}", f"kind={kind}") for c in range(n_chunks)]
+        paths = [p for p in paths if os.path.isdir(p)]
+        if not paths:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
+
+    raw_nodes = staged("node", NODE_SCHEMA)
+    raw_edges = staged("edge", EDGE_SCHEMA)
     eff_salt = salt
     if salt == -1:
         # auto: heavy-hitter sample over the staged raw node ids
@@ -422,30 +514,28 @@ def run_pipeline(
         key_n, key_e = natural_sort_key(fnodes.id), natural_sort_key(fedges.id)
         fnodes = fnodes.orderBy(key_n.asc() if asc else key_n.desc())
         fedges = fedges.orderBy(key_e.asc() if asc else key_e.desc())
+
+    def write_final(df: DataFrame, path: str) -> Observation:
+        # total + EnsureIdentical conflict count, observed on the write
+        # (conflicts render as !CONFLICT!-marked values; counting them here
+        # surfaces what would otherwise merge silently)
+        obs = Observation()
+        (
+            df.observe(obs, F.count("*").alias("n"),
+                       F.sum(has_property_conflict(df).cast("long")).alias("c"))
+            .write.mode("overwrite").partitionBy("label").parquet(path)
+        )
+        return obs
+
     final_nodes = os.path.join(out_dir, "nodes")
     final_edges = os.path.join(out_dir, "edges")
-    fnodes.write.mode("overwrite").partitionBy("label").parquet(final_nodes)
-    fedges.write.mode("overwrite").partitionBy("label").parquet(final_edges)
-
-    # one aggregation per table: total + EnsureIdentical conflict count
-    # (conflicts render as !CONFLICT!-marked values; counting them here
-    # surfaces what would otherwise merge silently)
-    from .fusion import has_property_conflict
-
-    def _count_with_conflicts(path: str, schema) -> tuple[int, int]:
-        # explicit schema: an empty table (edge-less mapping) writes a
-        # directory whose schema cannot be inferred back
-        t = spark.read.schema(schema).parquet(path)
-        row = t.agg(
-            F.count("*").alias("n"),
-            F.sum(has_property_conflict(t).cast("long")).alias("c"),
-        ).collect()[0]
-        return row["n"], row["c"] or 0
-
-    report.fused_nodes, report.node_property_conflicts = _count_with_conflicts(
-        final_nodes, fnodes.schema)
-    report.fused_edges, report.edge_property_conflicts = _count_with_conflicts(
-        final_edges, fedges.schema)
+    node_obs, edge_obs = _concurrently(
+        lambda: write_final(fnodes, final_nodes),
+        lambda: write_final(fedges, final_edges),
+    )
+    n, e = node_obs.get, edge_obs.get
+    report.fused_nodes, report.node_property_conflicts = n["n"], n["c"] or 0
+    report.fused_edges, report.edge_property_conflicts = e["n"], e["c"] or 0
     report.seconds = time.time() - t0
 
     manifest["final"] = {

@@ -89,6 +89,29 @@ class ValidationReport:
     invalid: int
     per_rule: dict[str, int]  # column -> invalid count
 
+    @classmethod
+    def from_row(cls, row, rules: dict[str, dict]) -> "ValidationReport":
+        """Build from the values of :func:`validation_aggs` (a Row, or the
+        dict an ``Observation`` returns)."""
+        total, valid = row["_total"], row["_valid"] or 0
+        return cls(
+            total=total, valid=valid, invalid=total - valid,
+            per_rule={col: row[f"_bad_{col}"] or 0 for col in sorted(rules)},
+        )
+
+
+def validation_aggs(rules: dict[str, dict]) -> list[Column]:
+    """Overall and per-rule violation counts as conditional sums: one
+    aggregation, no extra scan per rule. Usable in ``DataFrame.agg`` or,
+    for counts taken on an action that runs anyway, ``DataFrame.observe``."""
+    aggs = [
+        F.count("*").alias("_total"),
+        F.sum(validity(rules).cast("long")).alias("_valid"),
+    ]
+    for col in sorted(rules):
+        aggs.append(F.sum((~compile_rule(col, rules[col])).cast("long")).alias(f"_bad_{col}"))
+    return aggs
+
 
 def validate_input(
     df: DataFrame, rules: dict[str, dict], raise_errors: bool = False
@@ -99,19 +122,7 @@ def validate_input(
 
     ``raise_errors=True`` mirrors the reference's hard failure on input
     schema violation (validate.py:112-126)."""
-    aggs = [
-        F.count("*").alias("_total"),
-        F.sum(validity(rules).cast("long")).alias("_valid"),
-    ]
-    for col in sorted(rules):
-        aggs.append(F.sum((~compile_rule(col, rules[col])).cast("long")).alias(f"_bad_{col}"))
-    row = df.agg(*aggs).collect()[0]
-    report = ValidationReport(
-        total=row["_total"],
-        valid=row["_valid"] or 0,
-        invalid=row["_total"] - (row["_valid"] or 0),
-        per_rule={col: row[f"_bad_{col}"] or 0 for col in sorted(rules)},
-    )
+    report = ValidationReport.from_row(df.agg(*validation_aggs(rules)).collect()[0], rules)
     if raise_errors and report.invalid:
         raise ValueError(
             f"input validation failed: {report.invalid}/{report.total} rows invalid; "

@@ -24,6 +24,23 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 PAGES_N = int(os.environ.get("OW_BENCH_PAGES", "200000"))
 
 
+def clear_cached(spark) -> None:
+    """Drop a query's cached frames and leaked localCheckpoint RDDs.
+
+    Queries are independent (each rebuilds from the parquet scans), but
+    the checkpointed blocks of 160+ queries otherwise accumulate for the
+    whole suite and the resulting storage/GC pressure slows the late
+    heavy queries ~3x vs standalone (measured: cc_incremental 25.5 s
+    in-suite vs 8.5 s in a fresh session on identical code). Best-effort:
+    never fails a bench run."""
+    try:
+        spark.catalog.clearCache()
+        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            jrdd.unpersist(False)
+    except Exception:
+        pass
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -58,18 +75,7 @@ def main() -> None:
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
-        # drop the query's leaked localCheckpoint RDDs: queries are
-        # independent (each rebuilds from the parquet scans), but the
-        # checkpointed blocks of 160+ queries otherwise accumulate for the
-        # whole suite and the resulting storage/GC pressure slows the late
-        # heavy queries ~3x vs standalone (measured: cc_incremental 25.5 s
-        # in-suite vs 8.5 s in a fresh session on identical code)
-        try:
-            spark.catalog.clearCache()
-            for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                jrdd.unpersist(False)
-        except Exception:
-            pass  # cleanup is best-effort; never fail the bench over it
+        clear_cached(spark)
         if out is not None:
             counters[name] = out
 

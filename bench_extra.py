@@ -31,6 +31,7 @@ EXPLAIN_SUFFIX = os.environ.get("OW_BENCH_EXPLAIN_SUFFIX", "")
 
 
 def main() -> None:
+    from bench import clear_cached
     from ontoweaver_spark.session import get_spark
 
     spark = get_spark(
@@ -47,14 +48,6 @@ def main() -> None:
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
 
-    def clear() -> None:
-        try:
-            spark.catalog.clearCache()
-            for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                jrdd.unpersist(False)
-        except Exception:
-            pass
-
     timings: dict[str, float] = {}
     noop_timings: dict[str, float] = {}
     counts: dict[str, int] = {}
@@ -66,7 +59,7 @@ def main() -> None:
             counts[name] = qs[name](spark, SF_DIR).count()
             dt = time.time() - t0
             best = dt if best is None else min(best, dt)
-            clear()
+            clear_cached(spark)
         timings[name] = round(best, 3)
         if NOOP:
             best = None
@@ -75,7 +68,7 @@ def main() -> None:
                 qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
-                clear()
+                clear_cached(spark)
             noop_timings[name] = round(best, 3)
         if EXPLAIN_DIR:
             os.makedirs(EXPLAIN_DIR, exist_ok=True)

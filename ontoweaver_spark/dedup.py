@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textops import md5_int, round_ieee, tokens
-from .session import stats_reset_checkpoint
+from .session import fixpoint, stats_reset_checkpoint
 
 
 def _verify_bcast_rows() -> int:
@@ -296,8 +296,10 @@ def connected_components(
     ``session.stats_reset_checkpoint`` — bare ``localCheckpoint`` snapshots
     compounding size estimates and the BigInteger digit count doubles per
     round (the loop dies at ~20 rounds no matter the data size; see the
-    helper's docstring). Convergence is one (count, hash-sum) aggregate
-    per round; ``xxhash64`` is Spark-side only so no oracle sees it.
+    helper's docstring). Rounds run through ``session.fixpoint``:
+    convergence is its (count, hash-sum) probe, one aggregate per round
+    that also materializes the lazily checkpointed edge set; ``xxhash64``
+    is Spark-side only so no oracle sees it.
 
     Returns (vertex, component) where component = min vertex id in the
     component. Vertices appearing only in self-pairs are their own
@@ -319,16 +321,15 @@ def connected_components(
 
     from pyspark.sql import Window as _W
 
-    prev, rounds, converged = (-1, -1), 0, False
-    for _ in range(max_iterations):
-        rounds += 1
+    w_u = _W.partitionBy("u")
+
+    def star_round(e, _):
         # Each star pass needs every row of a u-group plus that group's
         # min — a WINDOW over partitionBy(u), ONE exchange, instead of
         # the groupBy+join formulation's two (the aggregate and the join
         # probe both repartitioned the symmetrized frame by u).
         # large-star
         sym = e.selectExpr("u", "v").unionAll(e.selectExpr("v AS u", "u AS v"))
-        w_u = _W.partitionBy("u")
         # lazy: ls is consumed only by the small-star pass below, so an
         # eager materialization here would add one job per round; the
         # checkpoint still pins it so the small-star self-reference does
@@ -347,34 +348,22 @@ def connected_components(
             ls.selectExpr("v AS u", "u AS v")
         ).where(F.col("v") < F.col("u"))
         attached = small.withColumn("m", F.min("v").over(w_u))
-        # lazy too: the convergence agg right below is the materializing
-        # action (computes AND persists in one job); the next round then
-        # reads the persisted partitions
-        e = stats_reset_checkpoint(
+        return (
             attached.select(F.col("v").alias("a"), F.col("m").alias("b"))
             .unionAll(attached.select(F.col("u").alias("a"), F.col("m").alias("b")))
             .where(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .distinct(),
-            eager=False,
+            .distinct()
         )
-        st = e.agg(
-            F.count("*").alias("n"), F.sum(F.xxhash64("u", "v")).alias("h")
-        ).first()
-        cur = (st["n"], st["h"])
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        # returning silently would split one component into several —
-        # downstream "keep one per cluster" would then keep too many
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iterations} "
-            "star rounds; raise max_iterations"
-        )
+
+    # returning silently past the cap would split one component into
+    # several — downstream "keep one per cluster" would then keep too many
+    e = fixpoint(
+        e, star_round, max_rounds=max_iterations, probe=F.xxhash64("u", "v"),
+        stats=stats,
+        error=f"connected_components did not converge within {max_iterations} "
+        "star rounds; raise max_iterations",
+    )
     # fixpoint edges ARE the component stars: (root=u, child=v)
     child = e.selectExpr("v AS vertex", "u AS component")
     roots = verts.join(child.select("vertex"), "vertex", "left_anti").select(
@@ -539,18 +528,6 @@ def simhash(c: Column, bits: int = 60) -> Column:
         F.zip_with(bit_sums, powers, lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long"))),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
-    )
-
-
-def simhash_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60
-) -> DataFrame:
-    """Groups of documents with identical simhash signatures."""
-    return (
-        df.select(F.col(id_col), simhash(F.col(text_col), bits).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.array_sort(F.collect_list(id_col)).alias("doc_ids"))
-        .where(F.col("n_docs") > 1)
     )
 
 

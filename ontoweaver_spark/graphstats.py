@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .textops import md5_int
-from .session import stats_reset_checkpoint
+from .session import Converged, fixpoint, stats_reset_checkpoint
 
 
 def degree_stats(
@@ -360,24 +360,23 @@ def k_core(
             .agg(F.count("*").alias("deg"))
         )
 
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
-    for i in range(rounds):
+    def peel(e, _):
         bad = degrees(e).where(F.col("deg") < k).select("node")
         if exact_rounds is None:
             bad = bad.transform(stats_reset_checkpoint)  # eager: counted AND reused by the joins
             if bad.count() == 0:
-                break
-        e = (
+                return Converged(e)
+        return (
             e.join(bad.withColumnRenamed("node", "u"), "u", "left_anti")
             .join(bad.withColumnRenamed("node", "v"), "v", "left_anti")
             .transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
         )
-    else:
-        if exact_rounds is None:
-            raise RuntimeError(
-                f"k_core did not converge in {max_rounds} rounds; the graph "
-                "has a long peel cascade — raise max_rounds"
-            )
+
+    e = fixpoint(
+        e, peel, max_rounds=max_rounds, exact_rounds=exact_rounds,
+        error=f"k_core did not converge in {max_rounds} rounds; the graph "
+        "has a long peel cascade — raise max_rounds",
+    )
     return degrees(e)
 
 
@@ -719,33 +718,22 @@ def shortest_paths(
         )
         return cur.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
 
-    if rounds is not None:
-        for _ in range(rounds):
-            dist = relax(dist).transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
-        if stats is not None:
-            stats["rounds"] = rounds
-        return dist
+    def step(dist, _):
+        # lazy: in fixpoint mode the change count below is the action that
+        # materializes the round
+        nxt = relax(dist).transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
+        if rounds is None and nxt.join(
+            dist.withColumnRenamed("dist", "_old"), "node", "left"
+        ).where(F.col("_old").isNull() | (F.col("dist") != F.col("_old"))).count() == 0:
+            return Converged(nxt)
+        return nxt
 
-    n = 0
-    for n in range(1, max_rounds + 1):
-        nxt = relax(dist).transform(stats_reset_checkpoint)
-        changed = (
-            nxt.join(dist.withColumnRenamed("dist", "_old"), "node", "left")
-            .where(F.col("_old").isNull() | (F.col("dist") != F.col("_old")))
-            .count()
-        )
-        dist = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"shortest_paths did not converge within {max_rounds} rounds; "
-            "raise max_rounds (graph diameter exceeds the cap) or use "
-            "exact-rounds mode"
-        )
-    if stats is not None:
-        stats["rounds"] = n
-    return dist
+    return fixpoint(
+        dist, step, max_rounds=max_rounds, exact_rounds=rounds, stats=stats,
+        error=f"shortest_paths did not converge within {max_rounds} rounds; "
+        "raise max_rounds (graph diameter exceeds the cap) or use "
+        "exact-rounds mode",
+    )
 
 
 def negative_triples(
@@ -1817,12 +1805,12 @@ def k_truss(
 
     ``exact_rounds=r`` runs exactly r peel rounds with zero driver syncs
     (the SQL-oracle-mirrorable mode, same design as k_core); fixpoint
-    mode counts dropped edges per round and raises loudly at
+    mode stops when a round drops no edge and raises loudly at
     ``max_rounds``. Peel rounds are bounded by |E| drops total; each
     round is one triangle-support pass (degree-ordered wedge join — hub
-    out-adjacency O(sqrt m)) + one semi-join filter on the shrinking
-    edge frame, through ``stats_reset_checkpoint`` like every other
-    fixpoint loop here.
+    out-adjacency O(sqrt m)) + one filter on the shrinking edge frame,
+    checkpointed lazily and materialized by ``session.fixpoint``'s
+    (count, hash-sum) probe.
     """
     if k < 3:
         raise ValueError(f"k-truss requires k >= 3, got {k}")
@@ -1834,37 +1822,18 @@ def k_truss(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
-    n_rounds, converged = 0, exact_rounds is not None
-    n_before = None  # lazily counted once; each round reuses last n_after
-    for _ in range(rounds):
-        n_rounds += 1
-        sup = _edge_support(e)
-        kept = sup.where(F.col("support") >= k - 2).select("u", "v", "support")
-        if exact_rounds is None:
-            kept = stats_reset_checkpoint(kept)
-            if n_before is None:
-                n_before = e.count()
-            n_after = kept.count()
-            e = kept.select("u", "v")
-            if n_after == n_before:
-                converged = True
-                e = kept  # keep the support column for the final result
-                break
-            n_before = n_after
-        else:
-            e = stats_reset_checkpoint(kept.select("u", "v"), eager=False)
-            last = kept
-    if stats is not None:
-        stats["rounds"] = n_rounds
-    if not converged:
-        raise RuntimeError(
-            f"k_truss did not converge within {max_rounds} peel rounds; "
-            "raise max_rounds"
-        )
-    if exact_rounds is not None:
-        return last
-    return e
+    # the (count, hash-sum) probe of the incoming frame makes round 1
+    # comparable: a round that drops no edge leaves both unchanged
+    return fixpoint(
+        e,
+        lambda e, _: _edge_support(e.select("u", "v"))
+        .where(F.col("support") >= k - 2)
+        .select("u", "v", "support"),
+        max_rounds=max_rounds, exact_rounds=exact_rounds,
+        probe=F.xxhash64("u", "v"), probe_start=True, stats=stats,
+        error=f"k_truss did not converge within {max_rounds} peel rounds; "
+        "raise max_rounds",
+    )
 
 
 def node2vec_walks(
@@ -2208,10 +2177,10 @@ def densest_subgraph(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
     trace = []
     spark = e.sparkSession
-    for i in range(rounds):
+
+    def peel(e, i):
         deg = (
             e.select(F.col("u").alias("node"))
             .unionAll(e.select("v"))
@@ -2223,22 +2192,22 @@ def densest_subgraph(
         ).first()
         nv, ne = (st["nv"] or 0), (st["deg2"] or 0) // 2
         if exact_rounds is None:
-            trace.append((i, nv, ne, (ne * scale) // nv if nv else 0))
+            trace.append((i - 1, nv, ne, (ne * scale) // nv if nv else 0))
         if nv == 0:
-            break
+            return Converged(e)
         bad = deg.where(
             F.col("deg") * F.lit(nv) * 100 <= F.lit(2 * ne * (100 + epsilon_pct))
         ).select("node")
         bad = stats_reset_checkpoint(bad, eager=False)
-        e = stats_reset_checkpoint(
+        return stats_reset_checkpoint(
             e.join(bad.withColumnRenamed("node", "u"), "u", "left_anti")
             .join(bad.withColumnRenamed("node", "v"), "v", "left_anti")
         )
-    else:
-        if exact_rounds is None and nv > 0:
-            raise RuntimeError(
-                f"densest_subgraph did not empty within {max_rounds} rounds"
-            )
+
+    e = fixpoint(
+        e, peel, max_rounds=max_rounds, exact_rounds=exact_rounds,
+        error=f"densest_subgraph did not empty within {max_rounds} rounds",
+    )
     if exact_rounds is not None:
         return e
     return spark.createDataFrame(
@@ -2348,10 +2317,14 @@ def maximal_independent_set(
         .transform(stats_reset_checkpoint)
     )
     spark = edges.sparkSession
-    selected = spark.createDataFrame([], "node string, sel_round int")
-    for i in range(1, rounds + 1):
-        if act.isEmpty():
-            return selected
+
+    def empty(st):
+        return st[0].isEmpty()
+
+    def luby(st, i):
+        if empty(st):
+            return Converged(st)
+        act, selected = st
         nbr_min = (
             e.join(act.select(F.col("node").alias("b"), F.col("k").alias("bk")), "b")
             .groupBy(F.col("a").alias("node"))
@@ -2374,11 +2347,14 @@ def maximal_independent_set(
             .join(hit, "node", "left_anti")
             .transform(stats_reset_checkpoint)
         )
-    if require_convergence and not act.isEmpty():
-        raise RuntimeError(
-            f"maximal_independent_set: active nodes remain after {rounds} rounds; "
-            "raise `rounds` (Luby needs O(log n) w.h.p.)"
-        )
+        return act, selected
+
+    _, selected = fixpoint(
+        (act, spark.createDataFrame([], "node string, sel_round int")), luby,
+        max_rounds=rounds, done=empty,
+        error=f"maximal_independent_set: active nodes remain after {rounds} rounds; "
+        "raise `rounds` (Luby needs O(log n) w.h.p.)" if require_convergence else None,
+    )
     return selected
 
 
@@ -2458,8 +2434,8 @@ def greedy_coloring(
     # twice in-plan (semi-join probe + newly base), which is cheaper than
     # a second job. Measured 25 -> ~8 s at sf0.1 vs the eager-per-frame
     # form.
-    converged = False
-    for i in range(1, rounds + 1):
+    def color_round(st, i):
+        act, colored = st
         # ONE neighbor pass per round: the state frame carries uncolored
         # neighbors' keys AND colored neighbors' colors (a plan-level
         # union), so readiness (min uncolored key) and the mex input
@@ -2499,19 +2475,22 @@ def greedy_coloring(
         # ready), so this trivial probe on the materialized checkpoint is
         # the convergence signal
         if newly.isEmpty():
-            converged = True
-            break
+            return Converged(st)
         colored = colored.unionByName(newly).transform(
             lambda _d: stats_reset_checkpoint(_d, eager=False)
         )
         act = act.join(newly.select("node"), "node", "left_anti").transform(
             lambda _d: stats_reset_checkpoint(_d, eager=False)
         )
-    if require_convergence and not converged and not act.isEmpty():
-        raise RuntimeError(
-            f"greedy_coloring: uncolored nodes remain after {rounds} rounds; "
-            "raise `rounds` (the longest priority-decreasing path exceeds it)"
-        )
+        return act, colored
+
+    _, colored = fixpoint(
+        (act, colored), color_round, max_rounds=rounds,
+        done=lambda st: st[0].isEmpty(),
+        error=f"greedy_coloring: uncolored nodes remain after {rounds} rounds; "
+        "raise `rounds` (the longest priority-decreasing path exceeds it)"
+        if require_convergence else None,
+    )
     return colored
 
 
@@ -2912,7 +2891,23 @@ def min_spanning_forest(
         [], "src string, dst string, weight long, msf_round int"
     )
     order_key = F.struct(F.col("w"), F.col("u"), F.col("v"))
-    for i in range(1, rounds + 1):
+
+    def jump(par, _):
+        hop = par.select(F.col("c").alias("p"), F.col("p").alias("pp"))
+        nxt = (
+            par.join(hop, "p")
+            .select("c", F.col("pp").alias("p"))
+            .transform(stats_reset_checkpoint)
+        )
+        flat = (
+            nxt.join(par.select("c", F.col("p").alias("old")), "c")
+            .where(F.col("p") != F.col("old"))
+            .isEmpty()
+        )
+        return Converged(nxt) if flat else nxt
+
+    def boruvka(st, i):
+        comp, forest = st
         ec = (
             e.join(comp.select(F.col("node").alias("u"), F.col("comp").alias("cu")), "u")
             .join(comp.select(F.col("node").alias("v"), F.col("comp").alias("cv")), "v")
@@ -2920,7 +2915,7 @@ def min_spanning_forest(
             .transform(stats_reset_checkpoint)  # eager: counted + two downstream uses
         )
         if ec.isEmpty():
-            return forest
+            return Converged(st)
         sym = ec.select(
             F.col("cu").alias("c"), F.col("cv").alias("oc"), "u", "v", "w"
         ).unionByName(
@@ -2966,36 +2961,24 @@ def min_spanning_forest(
             .select("c", F.coalesce("p", "c").alias("p"))
             .transform(stats_reset_checkpoint)
         )
-        for _ in range(jump_rounds):
-            hop = par.select(F.col("c").alias("p"), F.col("p").alias("pp"))
-            nxt = (
-                par.join(hop, "p")
-                .select("c", F.col("pp").alias("p"))
-                .transform(stats_reset_checkpoint)
-            )
-            changed = (
-                nxt.join(par.select("c", F.col("p").alias("old")), "c")
-                .where(F.col("p") != F.col("old"))
-                .isEmpty()
-            )
-            par = nxt
-            if changed:
-                break
-        else:
-            raise RuntimeError(
-                f"min_spanning_forest: pointer doubling not flat after "
-                f"{jump_rounds} jumps; raise jump_rounds"
-            )
+        par = fixpoint(
+            par, jump, max_rounds=jump_rounds,
+            error=f"min_spanning_forest: pointer doubling not flat after "
+            f"{jump_rounds} jumps; raise jump_rounds",
+        )
         comp = (
             comp.join(par.select(F.col("c").alias("comp"), "p"), "comp")
             .select("node", F.col("p").alias("comp"))
             .transform(stats_reset_checkpoint)
         )
-    if require_convergence:
-        raise RuntimeError(
-            f"min_spanning_forest: inter-component edges remain after {rounds} "
-            "Borůvka rounds; raise rounds (needs <= log2 n)"
-        )
+        return comp, forest
+
+    _, forest = fixpoint(
+        (comp, forest), boruvka, max_rounds=rounds,
+        error=f"min_spanning_forest: inter-component edges remain after {rounds} "
+        "Borůvka rounds; raise rounds (needs <= log2 n)"
+        if require_convergence else None,
+    )
     return forest
 
 
@@ -3039,29 +3022,20 @@ def temporal_reachability(
         .agg(F.min("arrival").alias("arrival"))
         .transform(stats_reset_checkpoint)
     )
-    prev = (-1, -1)
-    for r in range(rounds):
-        relax = (
+
+    def relax(arrival, _):
+        hop = (
             e.join(arrival.select(F.col("node").alias("u"), "arrival"), "u")
             .where(F.col("t") >= F.col("arrival"))
             .select(F.col("v").alias("node"), F.col("t").alias("arrival"))
         )
-        arrival = (
-            arrival.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("arrival").alias("arrival"))
-            .transform(stats_reset_checkpoint)
-        )
-        if not exact_rounds:
-            stats = arrival.agg(F.count("*").alias("n"), F.sum("arrival").alias("s")).first()
-            if (stats["n"], stats["s"]) == prev:
-                return arrival
-            prev = (stats["n"], stats["s"])
-    if not exact_rounds:
-        raise RuntimeError(
-            f"temporal_reachability: arrivals still relaxing after {rounds} rounds"
-        )
-    return arrival
+        return arrival.unionByName(hop).groupBy("node").agg(F.min("arrival").alias("arrival"))
+
+    return fixpoint(
+        arrival, relax, max_rounds=rounds, exact_rounds=rounds if exact_rounds else None,
+        probe="arrival",
+        error=f"temporal_reachability: arrivals still relaxing after {rounds} rounds",
+    )
 
 
 def butterfly_count(
@@ -3341,9 +3315,8 @@ def core_numbers(
         .orderBy(F.desc("e"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
-    prev = (-1, -1)
-    for r in range(rounds):
+
+    def h_index(est, _):
         hist = (
             und.join(est.select(F.col("node").alias("v"), F.col("est").alias("e")), "v")
             .groupBy(F.col("u").alias("node"), "e")
@@ -3354,20 +3327,14 @@ def core_numbers(
             .groupBy("node")
             .agg(F.max(F.least(F.col("e"), F.col("cum"))).alias("h"))
         )
-        est = (
-            est.join(hidx, "node", "left")
-            .select("node", F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est"))
-            .transform(stats_reset_checkpoint)
+        return est.join(hidx, "node", "left").select(
+            "node", F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est")
         )
-        if exact_rounds is None:
-            stats = est.agg(F.count("*").alias("n"), F.sum("est").alias("s")).first()
-            if (stats["n"], stats["s"]) == prev:
-                return est.select("node", F.col("est").alias("coreness"))
-            prev = (stats["n"], stats["s"])
-    if exact_rounds is None:
-        raise RuntimeError(
-            f"core_numbers: ests still dropping after {max_rounds} rounds"
-        )
+
+    est = fixpoint(
+        est, h_index, max_rounds=max_rounds, exact_rounds=exact_rounds, probe="est",
+        error=f"core_numbers: ests still dropping after {max_rounds} rounds",
+    )
     return est.select("node", F.col("est").alias("coreness"))
 
 
@@ -3441,11 +3408,11 @@ def maximal_matching(
         .localCheckpoint(eager=False)
     )
     spark = edges.sparkSession
-    matched = spark.createDataFrame([], "u string, v string")
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
-    for r in range(rounds):
+
+    def match_round(st, _):
+        e, matched = st
         if exact_rounds is None and e.rdd.isEmpty():
-            return matched
+            return Converged(st)
         # per-VERTEX min over every incident edge: a vertex sits in the u
         # column for some edges and the v column for others (canonical
         # least/greatest order), so the min must be taken over the union
@@ -3475,10 +3442,13 @@ def maximal_matching(
             .select("u", "v", "p")
             .transform(stats_reset_checkpoint)
         )
-    if exact_rounds is None:
-        raise RuntimeError(
-            f"maximal_matching: edges remain after {max_rounds} rounds"
-        )
+        return e, matched
+
+    _, matched = fixpoint(
+        (e, spark.createDataFrame([], "u string, v string")), match_round,
+        max_rounds=max_rounds, exact_rounds=exact_rounds,
+        error=f"maximal_matching: edges remain after {max_rounds} rounds",
+    )
     return matched
 
 
@@ -3828,9 +3798,8 @@ def truss_numbers(
         .orderBy(F.desc("m"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    rounds = exact_rounds if exact_rounds is not None else max_rounds
-    prev = (-1, -1)
-    for _ in range(rounds):
+
+    def h_index(est, _):
         strengths = (
             inc.join(
                 est.select(
@@ -3854,21 +3823,15 @@ def truss_numbers(
             .groupBy(F.col("eu").alias("u"), F.col("ev").alias("v"))
             .agg(F.max(F.least(F.col("m"), F.col("cum"))).alias("h"))
         )
-        est = stats_reset_checkpoint(
-            est.join(hidx, ["u", "v"], "left").select(
-                "u", "v",
-                F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est"),
-            )
+        return est.join(hidx, ["u", "v"], "left").select(
+            "u", "v",
+            F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est"),
         )
-        if exact_rounds is None:
-            probe = est.agg(F.count("*").alias("n"), F.sum("est").alias("s")).first()
-            if (probe["n"], probe["s"]) == prev:
-                return est.select("u", "v", (F.col("est") + 2).alias("trussness"))
-            prev = (probe["n"], probe["s"])
-    if exact_rounds is None:
-        raise RuntimeError(
-            f"truss_numbers: ests still dropping after {max_rounds} rounds"
-        )
+
+    est = fixpoint(
+        est, h_index, max_rounds=max_rounds, exact_rounds=exact_rounds, probe="est",
+        error=f"truss_numbers: ests still dropping after {max_rounds} rounds",
+    )
     return est.select("u", "v", (F.col("est") + 2).alias("trussness"))
 
 
@@ -4223,9 +4186,8 @@ def bootstrap_percolation(
             "node", F.lit(0).cast("long").alias("round")
         )
     )
-    n_rounds = rounds if rounds is not None else max_rounds
-    prev_n = None
-    for r in range(1, n_rounds + 1):
+
+    def spread(active, r):
         newly = (
             e.join(active.select(F.col("node").alias("u")), "u")
             .select(F.col("v").alias("node"))
@@ -4235,17 +4197,14 @@ def bootstrap_percolation(
             .join(active.select("node"), "node", "left_anti")
             .select("node", F.lit(r).cast("long").alias("round"))
         )
-        active = stats_reset_checkpoint(active.unionAll(newly))
-        if rounds is None:
-            n = active.count()
-            if n == prev_n:
-                return active
-            prev_n = n
-    if rounds is None:
-        raise RuntimeError(
-            f"bootstrap_percolation: still spreading after {max_rounds} rounds"
-        )
-    return active
+        return active.unionAll(newly)
+
+    # active only grows, so an unchanged (count, sum(round)) probe means
+    # no node activated this round
+    return fixpoint(
+        active, spread, max_rounds=max_rounds, exact_rounds=rounds, probe="round",
+        error=f"bootstrap_percolation: still spreading after {max_rounds} rounds",
+    )
 
 
 def four_clique_counts(

@@ -63,12 +63,6 @@ def NumericMax() -> Merger:
     ).cast("string")
 
 
-def NumericMin() -> Merger:
-    return lambda vals: F.array_min(
-        F.transform(vals, lambda x: x.cast("long"))
-    ).cast("string")
-
-
 def _ancestor_chains(parents: dict[str, str]) -> "Column":
     """child->parent edges -> map literal {type: [type, parent, ..., root]}.
 

@@ -23,7 +23,3 @@ def is_not_null(col: Column) -> Column:
         & (F.lower(col) != F.lit("nan"))
         & (col != F.lit("None"))
     )
-
-
-def is_null(col: Column) -> Column:
-    return ~is_not_null(col)

@@ -12,15 +12,14 @@ a plain (child, parent) DataFrame — loadable from ``loaders.read_rdf_triples``
 Scale shape: the closure uses **path doubling** (round k holds every pair at
 distance <= 2^k with its exact minimum depth), so a hierarchy of depth d
 needs ceil(log2 d) self-join rounds, not d — an ontology 40 levels deep
-closes in 6 shuffles. Each round min-aggregates on (descendant, ancestor)
-and ``localCheckpoint``s to truncate lineage, the same iterative-algorithm
-hygiene as ``dedup.connected_components``.
+closes in 6 shuffles. Each round min-aggregates on (descendant, ancestor);
+rounds run through ``session.fixpoint`` like every capped loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from .session import stats_reset_checkpoint
+from .session import Converged, fixpoint, stats_reset_checkpoint
 
 RDFS_SUBCLASSOF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
 
@@ -73,6 +72,10 @@ def subclass_closure(
         .localCheckpoint()
     )
 
+    error = (
+        f"subclass_closure still growing after {max_rounds} doubling rounds "
+        f"(covers depth {2 ** max_rounds}); raise max_rounds"
+    )
     if depth_agg != "max":
         # SEMI-NAIVE doubling for the min-depth mode: only pairs that
         # entered last round can mint new pairs.  A pair first reachable
@@ -87,8 +90,8 @@ def subclass_closure(
         # among themselves and anti-joined against reach.
         # (The "max" mode below cannot do this: longest-path depths keep
         # improving after insertion, so deltas are not just new pairs.)
-        delta = reach
-        for _ in range(max_rounds):
+        def semi_naive(st, _):
+            reach, delta = st
             dm = delta.select(
                 F.col("d").alias("m"), F.col("a").alias("a2"),
                 F.col("depth").alias("dep2"),
@@ -117,46 +120,30 @@ def subclass_closure(
                 .transform(stats_reset_checkpoint)
             )
             if delta.isEmpty():
-                return reach.select(
-                    F.col("d").alias("descendant"),
-                    F.col("a").alias("ancestor"),
-                    F.col("depth").cast("int").alias("depth"),
-                )
-            reach = reach.unionByName(delta).transform(
+                return Converged(st)
+            return reach.unionByName(delta).transform(
                 lambda _d: stats_reset_checkpoint(_d, eager=False)
-            )
-        raise RuntimeError(
-            f"subclass_closure still growing after {max_rounds} doubling rounds "
-            f"(covers depth {2 ** max_rounds}); raise max_rounds"
-        )
+            ), delta
 
-    prev_rows, prev_depth_sum = -1, -1
-    for _ in range(max_rounds):
-        mid = reach.select(
-            F.col("d").alias("m"), F.col("a").alias("a2"), F.col("depth").alias("dep2")
-        )
-        doubled = reach.join(mid, reach["a"] == mid["m"]).select(
-            "d", F.col("a2").alias("a"), (F.col("depth") + F.col("dep2")).alias("depth")
-        )
-        reach = (
-            reach.unionByName(doubled)
-            .groupBy("d", "a")
-            .agg(F.max("depth").alias("depth"))
-            .transform(stats_reset_checkpoint)
-        )
-        stats = reach.agg(
-            F.count("*").alias("n"), F.sum("depth").alias("s")
-        ).first()
-        if (stats["n"], stats["s"]) == (prev_rows, prev_depth_sum):
-            return reach.select(
-                F.col("d").alias("descendant"),
-                F.col("a").alias("ancestor"),
-                F.col("depth").cast("int").alias("depth"),
+        reach, _ = fixpoint((reach, reach), semi_naive, max_rounds=max_rounds, error=error)
+    else:
+
+        def double(reach, _):
+            mid = reach.select(
+                F.col("d").alias("m"), F.col("a").alias("a2"), F.col("depth").alias("dep2")
             )
-        prev_rows, prev_depth_sum = stats["n"], stats["s"]
-    raise RuntimeError(
-        f"subclass_closure still growing after {max_rounds} doubling rounds "
-        f"(covers depth {2 ** max_rounds}); raise max_rounds"
+            doubled = reach.join(mid, reach["a"] == mid["m"]).select(
+                "d", F.col("a2").alias("a"), (F.col("depth") + F.col("dep2")).alias("depth")
+            )
+            return reach.unionByName(doubled).groupBy("d", "a").agg(
+                F.max("depth").alias("depth")
+            )
+
+        reach = fixpoint(reach, double, max_rounds=max_rounds, probe="depth", error=error)
+    return reach.select(
+        F.col("d").alias("descendant"),
+        F.col("a").alias("ancestor"),
+        F.col("depth").cast("int").alias("depth"),
     )
 
 
@@ -504,7 +491,7 @@ def rdfs_entailment(
         .distinct()
         # consumed three times (returned + dom join + rng join): pin the
         # instance-scale closure so the expansion runs once, not thrice
-        .localCheckpoint(eager=False)
+        .transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
     )
 
     # owl:TransitiveProperty: per-property transitive closure over the
@@ -540,9 +527,8 @@ def rdfs_entailment(
                 .where(~((F.col("p") == F.col("q")) & (F.col("flip") == 0)))
             )
             single_pass = feeding.isEmpty()
-        prev_n = None if single_pass else edges_closed.count()
-        rounds_budget = 1 if single_pass else max_rounds
-        for _ in range(rounds_budget):
+
+        def close_pass(edges_closed, _):
             derived = []
             if has_trans:
                 enc = edges_closed.join(b_trans, "predicate").select(
@@ -586,22 +572,17 @@ def rdfs_entailment(
                 F.when(F.col("flip") == 0, F.col("object"))
                 .otherwise(F.col("subject")).alias("object"),
             )
-            edges_closed = (
-                edges_closed.unionByName(expanded)
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            if single_pass:
-                break  # completeness proven schema-side; no count job
-            n = edges_closed.count()
-            if n == prev_n:
-                break
-            prev_n = n
-        else:
-            raise RuntimeError(
-                f"rdfs_entailment: transitive/chain/rewrite closure still "
-                f"growing after {max_rounds} passes"
-            )
+            return edges_closed.unionByName(expanded).distinct()
+
+        # completeness proven schema-side runs exactly one pass, no probe
+        # job; otherwise passes repeat until the edge set stops growing
+        edges_closed = fixpoint(
+            edges_closed, close_pass, max_rounds=max_rounds,
+            exact_rounds=1 if single_pass else None,
+            probe=F.xxhash64("subject", "predicate", "object"), probe_start=True,
+            error=f"rdfs_entailment: transitive/chain/rewrite closure still "
+            f"growing after {max_rounds} passes",
+        )
 
     b_dom = F.broadcast(dom.select(F.col("x").alias("predicate"), F.col("y").alias("cls")))
     b_rng = F.broadcast(rng.select(F.col("x").alias("predicate"), F.col("y").alias("cls")))

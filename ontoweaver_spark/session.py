@@ -10,8 +10,9 @@ assumes local mode.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
 ENGINE_CONF = {
     "spark.sql.ansi.enabled": "false",
@@ -92,9 +93,9 @@ def stats_reset_checkpoint(df, eager: bool = True):
     checkpointed frame if the private JVM hook is unavailable (slow at
     high round counts, never wrong).
 
-    Every unbounded-round loop in this repo (connected components, k-core
-    peel, fixpoint shortest paths, redirect chasing) routes through this
-    instead of bare ``localCheckpoint``.
+    Every capped iterative loop in this repo runs through :func:`fixpoint`:
+    its probe mode checkpoints each round's state through this, and steps
+    that checkpoint their own loop-carried state call it directly.
     """
     from pyspark.sql import DataFrame as _DF
 
@@ -108,3 +109,70 @@ def stats_reset_checkpoint(df, eager: bool = True):
         return _DF(fresh, spark)
     except Exception:  # pragma: no cover - Connect / future-Spark fallback
         return ck
+
+
+class Converged(NamedTuple):
+    """Returned by a :func:`fixpoint` step whose own test found the
+    fixpoint (an empty frontier, nothing left to peel): the loop stops
+    and ``state`` is the result."""
+
+    state: object
+
+
+def fixpoint(
+    state,
+    step,
+    *,
+    max_rounds: int,
+    error: str | None,
+    exact_rounds: int | None = None,
+    probe=None,
+    probe_start: bool = False,
+    done=None,
+    stats: dict | None = None,
+):
+    """Run ``state = step(state, i)`` for rounds ``i = 1, 2, ...`` — the one
+    round policy of every capped iterative operator (recursive graph
+    queries as relational fixpoints).
+
+    - ``exact_rounds=r`` runs exactly r steps and tests nothing: the
+      oracle-unroll mode, no probe job and no cap error.
+    - Otherwise the loop stops when a step returns :class:`Converged` or
+      the probe finds the state unchanged. After ``max_rounds`` steps it
+      raises ``RuntimeError(error)``, unless ``error`` is None (the cap is
+      a budget, not a failure) or ``done(state)`` accepts the last state
+      (for steps that test their INPUT, the last round's output is
+      otherwise never tested).
+    - ``probe`` (a column of a DataFrame state): each round's state is
+      checkpointed lazily through :func:`stats_reset_checkpoint`, and the
+      ``(count, sum(probe))`` aggregate — the action that materializes
+      it — is compared with the previous round's. ``probe_start`` probes
+      the incoming state too, so the first step may already be the
+      fixpoint.
+
+    ``stats["rounds"]`` receives the number of steps run.
+    """
+
+    def measure(df):
+        return tuple(df.agg(F.count("*"), F.sum(probe)).first())
+
+    exact = exact_rounds is not None
+    prev = measure(state) if probe_start and not exact else None
+    converged, rounds = exact, 0  # exact mode never raises
+    for rounds in range(1, (exact_rounds if exact else max_rounds) + 1):
+        state = step(state, rounds)
+        if isinstance(state, Converged):
+            state, converged = state.state, True
+            break
+        if probe is not None:
+            state = stats_reset_checkpoint(state, eager=False)
+            if not exact:
+                prev, last = measure(state), prev
+                if prev == last:
+                    converged = True
+                    break
+    if stats is not None:
+        stats["rounds"] = rounds
+    if not converged and error is not None and not (done is not None and done(state)):
+        raise RuntimeError(error)
+    return state

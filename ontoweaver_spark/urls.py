@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from .session import stats_reset_checkpoint
+from .session import fixpoint
 
 # tracking parameters every crawler strips (Google/Facebook/Microsoft
 # click ids + utm campaign tags)
@@ -183,14 +183,14 @@ def resolve_redirects(
     mapping, so joining it with itself doubles the resolved chain length
     every round — ``max_rounds=16`` covers chains 2^16 deep in 16 joins,
     not 65k. Terminal targets (never a source themselves) left-join to
-    nothing and keep their resolution; a fixpoint on (rows, hop-sum)
-    stops early, exactly the convergence contract of
-    ``ontology.subclass_closure``. A redirect CYCLE never reaches the
+    nothing and keep their resolution; ``session.fixpoint``'s (rows,
+    hop-sum) probe stops early. A redirect CYCLE never reaches the
     fixpoint (hops grow each round), so exhausting ``max_rounds`` raises
     instead of silently emitting a partial resolution.
 
     Scale shape (10^12 urls): each round is ONE self-equi-join on the
-    current-target key plus a localCheckpoint to pin lineage; no window,
+    current-target key plus a lazy checkpoint (the probe materializes
+    it) to pin lineage; no window,
     no driver data. Redirect frontiers are a small fraction of the crawl
     (sources only), and AQE handles hub targets (link shorteners) as
     ordinary join skew.
@@ -205,31 +205,25 @@ def resolve_redirects(
         .withColumn("hops", F.lit(1).cast("long"))
         .localCheckpoint()
     )
-    prev = (-1, -1)
-    for _ in range(max_rounds):
+    def double(state, _):
         hop = state.select(
             F.col("src").alias("m_src"),
             F.col("cur").alias("m_cur"),
             F.col("hops").alias("m_hops"),
         )
-        state = (
-            state.join(hop, state["cur"] == hop["m_src"], "left")
-            .select(
-                "src",
-                F.coalesce("m_cur", "cur").alias("cur"),
-                (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
-            )
-            .transform(stats_reset_checkpoint)
+        return state.join(hop, state["cur"] == hop["m_src"], "left").select(
+            "src",
+            F.coalesce("m_cur", "cur").alias("cur"),
+            (F.col("hops") + F.coalesce("m_hops", F.lit(0))).alias("hops"),
         )
-        stats = state.agg(F.count("*").alias("n"), F.sum("hops").alias("s")).first()
-        if (stats["n"], stats["s"]) == prev:
-            return state.select(
-                "src", F.col("cur").alias("final_url"), F.col("hops").cast("int").alias("hops")
-            )
-        prev = (stats["n"], stats["s"])
-    raise RuntimeError(
-        f"resolve_redirects not converged after {max_rounds} doubling rounds "
-        f"(chains up to {2 ** max_rounds} resolved) — redirect cycle likely"
+
+    state = fixpoint(
+        state, double, max_rounds=max_rounds, probe="hops",
+        error=f"resolve_redirects not converged after {max_rounds} doubling rounds "
+        f"(chains up to {2 ** max_rounds} resolved) — redirect cycle likely",
+    )
+    return state.select(
+        "src", F.col("cur").alias("final_url"), F.col("hops").cast("int").alias("hops")
     )
 
 

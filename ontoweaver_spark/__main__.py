@@ -180,11 +180,12 @@ def main(argv=None) -> int:
         ap.error("--out is required (flag, ONTOWEAVE_OUT, or config `out:`)")
     if args.neo4j_import_run and not args.neo4j_out:
         ap.error("--neo4j-import-run requires --neo4j-out")
+    if args.chunks > 1 and args.shacl:
+        # the chunked path runs run_pipeline, which has no SHACL gate
+        ap.error("--shacl cannot be combined with --chunks")
 
     from . import registry
-    from .fusion import reconciliate
     from .loaders import read_table, sub_sample
-    from .pipeline import _save_manifest
     from .session import get_spark
     from .spec import load_mapping
 
@@ -205,20 +206,24 @@ def main(argv=None) -> int:
     spark = get_spark(app_name="ontoweave-spark", master=args.master)
     spark.sparkContext.setLogLevel(args.log_level)
 
+    def read_pair(pair: str):
+        data_path, _, mapping_path = pair.rpartition(":")
+        if not data_path:
+            ap.error(f"expected DATA:MAPPING, got {pair!r}")
+        spec = load_mapping(mapping_path)
+        df = read_table(spark, data_path, sep=args.sep)
+        if args.sub_sample:
+            # validate-only checks the same rows extraction sees
+            df = sub_sample(df, args.sub_sample)
+        return df, spec
+
     if args.validate_only:
         # reference --validate-only: check the inputs, report, don't build
         from .validate import validate_input
 
         reports, any_invalid = {}, False
         for pair in args.pairs:
-            data_path, _, mapping_path = pair.rpartition(":")
-            if not data_path:
-                ap.error(f"expected DATA:MAPPING, got {pair!r}")
-            spec = load_mapping(mapping_path)
-            df = read_table(spark, data_path, sep=args.sep)
-            if args.sub_sample:
-                # validate the same rows extraction would see
-                df = sub_sample(df, args.sub_sample)
+            df, spec = read_pair(pair)
             if not spec.input_rules:
                 reports[pair] = {"rules": 0}
                 continue
@@ -232,168 +237,75 @@ def main(argv=None) -> int:
         spark.stop()
         return 1 if any_invalid else 0
 
-    from .compiler import compile_mapping
+    from .pipeline import _publish, _save_manifest, run_pipeline
 
+    # the post-fusion options both paths hand to the one post-fusion chain
+    sinks = dict(prop_sep=args.prop_sep, sort=args.sort,
+                 validate_output=args.validate_output,
+                 bucketed_out=args.bucketed_out, neo4j_out=args.neo4j_out)
     if args.chunks > 1:
         # resumable chunked path (single source): manifest-tracked extraction
         if len(args.pairs) != 1:
             ap.error("--chunks requires exactly one DATA:MAPPING pair")
-        from .pipeline import run_pipeline
-
-        data_path, _, mapping_path = args.pairs[0].rpartition(":")
-        if not data_path:
-            ap.error(f"expected DATA:MAPPING, got {args.pairs[0]!r}")
-        df = read_table(spark, data_path, sep=args.sep)
-        if args.sub_sample:
-            df = sub_sample(df, args.sub_sample)
+        df, spec = read_pair(args.pairs[0])
         report = run_pipeline(
-            spark, df, load_mapping(mapping_path), args.out,
+            spark, df, spec, args.out,
             affix=args.affix, type_affix_sep=args.affix_sep,
             reconciliate_sep=args.reconciliate_sep,
             n_chunks=args.chunks, salt=args.salt,
             raise_errors=not args.pass_errors,
-            validate_mode=args.validate_mode,
-            # post-fusion flags are honored here too (they used to be
-            # silently dropped when combined with --chunks)
-            prop_sep=args.prop_sep, sort=args.sort,
-            validate_output=args.validate_output,
-            bucketed_out=args.bucketed_out,
-            # pre-render export inside the pipeline (same ordering as the
-            # single-shot path): exporting from the final parquet after
-            # --prop-sep rendering would emit joined-string scalars instead
-            # of :string[] headers
-            neo4j_out=args.neo4j_out,
+            validate_mode=args.validate_mode, **sinks,
         )
         out_json = {
             "nodes": report.fused_nodes, "edges": report.fused_edges,
             "out": args.out, "chunks_resumed": report.chunks_resumed,
             "chunks_extracted": report.chunks_extracted,
         }
-        if report.integrity is not None:
-            out_json["integrity"] = report.integrity
-        print(json.dumps(out_json))
-        spark.stop()
-        if report.integrity is not None and not report.integrity["ok"]:
-            return 1
-        if args.neo4j_import_run:
-            from .neo4j_export import run_import_script
+        gates = {"integrity": report.integrity} if report.integrity is not None else {}
+    else:
+        from .compiler import compile_mapping
+        from .fusion import reconciliate
 
-            return run_import_script(args.neo4j_out)
-        return 0
+        all_nodes, all_edges = None, None
+        for pair in args.pairs:
+            df, spec = read_pair(pair)
+            res = compile_mapping(
+                df, spec, affix=args.affix, type_affix_sep=args.affix_sep,
+                validate_mode=args.validate_mode,
+            )
+            all_nodes = res.nodes if all_nodes is None else all_nodes.unionByName(res.nodes)
+            all_edges = res.edges if all_edges is None else all_edges.unionByName(res.edges)
 
-    all_nodes, all_edges = None, None
-    for pair in args.pairs:
-        data_path, _, mapping_path = pair.rpartition(":")
-        if not data_path:
-            ap.error(f"expected DATA:MAPPING, got {pair!r}")
-        df = read_table(spark, data_path, sep=args.sep)
-        if args.sub_sample:
-            df = sub_sample(df, args.sub_sample)
-        res = compile_mapping(
-            df, load_mapping(mapping_path),
-            affix=args.affix, type_affix_sep=args.affix_sep,
-            validate_mode=args.validate_mode,
+        salt = args.salt
+        if salt == -1:
+            # heavy-hitter sample over the raw node ids picks the factor that
+            # bounds the hottest fused group's per-task size. Cache first:
+            # sampling happens AFTER the extraction transforms, so without it
+            # the estimate would re-run the whole extraction a second time.
+            # (The chunked path avoids this by sampling its staged parquet.)
+            from .fusion import suggest_salt
+
+            all_nodes = all_nodes.persist()
+            salt = suggest_salt(all_nodes, ["id"])
+        fnodes, fedges = reconciliate(
+            all_nodes, all_edges,
+            reconciliate_sep=args.reconciliate_sep,
+            raise_errors=not args.pass_errors, salt=salt,
         )
-        all_nodes = res.nodes if all_nodes is None else all_nodes.unionByName(res.nodes)
-        all_edges = res.edges if all_edges is None else all_edges.unionByName(res.edges)
+        final = _publish(fnodes, fedges, args.out, shacl=args.shacl, **sinks)
+        for line in final.pop("shacl_sample", []):
+            print(line, file=sys.stderr)
+        gates = {k: final.pop(k) for k in ("integrity", "shacl_violations")
+                 if final.get(k) is not None}
+        _save_manifest(args.out, {"chunks": {}, "final": final,
+                                  "inputs": args.pairs, **gates})
+        out_json = {"nodes": final["nodes"], "edges": final["edges"], "out": args.out}
 
-    salt = args.salt
-    if salt == -1:
-        # heavy-hitter sample over the raw node ids picks the factor that
-        # bounds the hottest fused group's per-task size. Cache first:
-        # sampling happens AFTER the extraction transforms, so without it
-        # the estimate would re-run the whole extraction a second time.
-        # (The chunked path avoids this by sampling its staged parquet.)
-        from .fusion import suggest_salt
-
-        all_nodes = all_nodes.persist()
-        salt = suggest_salt(all_nodes, ["id"])
-    fnodes, fedges = reconciliate(
-        all_nodes, all_edges,
-        reconciliate_sep=args.reconciliate_sep,
-        raise_errors=not args.pass_errors, salt=salt,
-    )
-    if args.bucketed_out:
-        from .pipeline import write_bucketed_graph
-
-        write_bucketed_graph(fnodes, fedges, database=args.bucketed_out)
-    if args.neo4j_out:
-        # pre-render: the emitter renders arrays with its own delimiter
-        from .neo4j_export import write_neo4j_import
-
-        write_neo4j_import(fnodes, fedges, args.neo4j_out)
-    integrity = None
-    if args.validate_output:
-        # reference -V: final-graph invariants (pre-render — needs raw ids)
-        from .validate import graph_integrity
-
-        integrity = graph_integrity(fnodes, fedges)
-    shacl_n = None
-    if args.shacl:
-        # publish gate: per-node structural contracts over the FUSED graph
-        # (pre-render — cardinalities/classes need raw ids and the props map)
-        from .validate import graph_props_frame, load_shapes, shacl_validate
-
-        shapes = load_shapes(args.shacl)
-        viol = shacl_validate(
-            fnodes.select("id", "label"), fedges,
-            shapes, props=graph_props_frame(fnodes),
-        ).localCheckpoint()
-        shacl_n = viol.count()
-        if shacl_n:
-            import os as _os
-
-            vpath = _os.path.join(args.out, "shacl_violations")
-            viol.write.mode("overwrite").parquet(vpath)
-            for r in viol.limit(5).collect():
-                print(f"SHACL {r.violation}: node={r.id} shape={r.shape} "
-                      f"path={r.path} observed={r.observed}", file=sys.stderr)
-
-    if args.prop_sep is not None:
-        # reference -S prop-sep: render multi-valued properties as joined
-        # strings (the BioCypher-export shape) instead of arrays
-        from .fusion import format_for_export
-
-        fnodes = format_for_export(fnodes, sep=args.prop_sep)
-        fedges = format_for_export(fedges, sep=args.prop_sep)
-
-    if args.sort:
-        # natural order like the reference's natsort --sort
-        # (ontoweave.py:405-412): id2 before id10
-        from .ids import natural_sort_key
-
-        asc = args.sort == "ascend"
-        key_n = natural_sort_key(fnodes.id)
-        key_e = natural_sort_key(fedges.id)
-        fnodes = fnodes.orderBy(key_n.asc() if asc else key_n.desc())
-        fedges = fedges.orderBy(key_e.asc() if asc else key_e.desc())
-
-    import os
-    nodes_path, edges_path = os.path.join(args.out, "nodes"), os.path.join(args.out, "edges")
-    fnodes.write.mode("overwrite").partitionBy("label").parquet(nodes_path)
-    fedges.write.mode("overwrite").partitionBy("label").parquet(edges_path)
-    n, e = (
-        spark.read.parquet(nodes_path).count(),
-        spark.read.parquet(edges_path).count(),
-    )
-    manifest = {
-        "chunks": {}, "final": {"nodes": n, "edges": e,
-                                "nodes_path": nodes_path, "edges_path": edges_path},
-        "inputs": args.pairs,
-    }
-    out_json = {"nodes": n, "edges": e, "out": args.out}
-    if integrity is not None:
-        manifest["integrity"] = integrity
-        out_json["integrity"] = integrity
-    if shacl_n is not None:
-        manifest["shacl_violations"] = shacl_n
-        out_json["shacl_violations"] = shacl_n
-    _save_manifest(args.out, manifest)
-    print(json.dumps(out_json))
+    print(json.dumps({**out_json, **gates}))
     spark.stop()
-    if integrity is not None and not integrity["ok"]:
+    if "integrity" in gates and not gates["integrity"]["ok"]:
         return 1
-    if shacl_n and not args.shacl_report_only:
+    if gates.get("shacl_violations") and not args.shacl_report_only:
         return 3
     if args.neo4j_import_run:
         from .neo4j_export import run_import_script

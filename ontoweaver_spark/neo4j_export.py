@@ -8,8 +8,10 @@ drives it via ``--import-script-run``; BioCypher writes the files). This is
 the Spark-native analog, no BioCypher needed:
 
 - each label's rows stream to ``nodes_<label>/part-*.csv`` through Spark's
-  distributed CSV writer (label-partition pruning on the fused parquet makes
-  each group one narrow scan; nothing ever collects to the driver);
+  distributed CSV writer, one job per label group plus one profiling job
+  per side, so pass materialized frames (``run_pipeline`` hands it the
+  checkpointed fused graph): on lazy fused frames every group re-runs
+  fusion. Nothing ever collects to the driver;
 - the one-line ``header.csv`` per group is driver-written (config-sized);
 - ``neo4j-import.sh`` lists every group with the header,data-regex syntax
   neo4j-admin expects.

@@ -22,7 +22,9 @@ phase is ONE pass over its data; the manifest's counts are taken with
   nodes and the fused edges are written concurrently (two independent
   jobs: the hub-skewed node reduce leaves cores the edge fusion uses) as
   parquet partitioned by label (partition pruning for per-type consumers);
-  ``manifest["final"]`` is saved only once both writes succeed.
+  the optional sinks (bucketed tables, Neo4j export, integrity) then read
+  the fused frames pinned by those writes (:func:`_publish`).
+  ``manifest["final"]`` is saved only once the writes and sinks succeed.
 
 Where each manifest count comes from:
 
@@ -54,7 +56,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .compiler import EDGE_SCHEMA, NODE_SCHEMA, compile_mapping
-from .fusion import has_property_conflict, reconciliate
+from .fusion import format_for_export, has_property_conflict, reconciliate
+from .ids import natural_sort_key
 from .spec import MappingSpec, load_mapping
 
 #: staging layout tag recorded in ``extract_conf``: an out_dir staged under
@@ -273,18 +276,15 @@ def run_pipeline(
 ) -> RunReport:
     """Run the full pipeline with checkpoint/resume.
 
-    ``prop_sep`` / ``sort`` / ``validate_output`` / ``bucketed_out`` mirror
-    the CLI's post-fusion flags so the chunked path honors them too
-    (integrity is checked PRE-render, on raw ids, exactly like the
-    single-shot path): render multi-valued properties joined with
-    ``prop_sep``; natural-order ``sort`` ("ascend"/"descend") by id before
-    writing; ``validate_output`` runs final-graph invariants into
-    ``report.integrity``; ``bucketed_out`` also materializes bucketed
-    tables in that database; ``neo4j_out`` writes the Neo4j bulk-import
-    directory PRE-render (from array-typed properties, so multi-valued
-    props get ``:string[]`` headers), the same ordering as the single-shot
-    CLI path — exporting from the final parquet after ``prop_sep``
-    rendering would emit scalar joined-string columns instead.
+    Everything after fusion is :func:`_publish`, the one post-fusion chain
+    the CLI runs too: ``prop_sep`` renders multi-valued properties joined
+    with it and ``sort`` ("ascend"/"descend") natural-orders the final
+    tables by id; then, from the PRE-render fused frames (raw ids,
+    array-valued properties), ``bucketed_out`` materializes bucketed
+    tables in that database, ``neo4j_out`` writes the Neo4j bulk-import
+    directory (multi-valued props get ``:string[]`` headers) and
+    ``validate_output`` runs the final-graph invariants into
+    ``report.integrity``. Fusion runs once whichever of them are on.
 
     ``chunk_key``: stable column used to split the input into resumable
     chunks (e.g. ``url``). With ``n_chunks=1`` staging is a single snapshot.
@@ -439,118 +439,172 @@ def run_pipeline(
                    "bucketed_out": bucketed_out,
                    "neo4j_out": neo4j_out}
     final = manifest.get("final")
-    if (
-        report.chunks_extracted == 0
-        and final
-        and final.get("fusion_conf") == fusion_conf
-    ):
-        # full resume: no chunk re-extracted and the fused snapshot was
-        # built from exactly these chunks with the same fusion parameters —
-        # reuse it instead of re-shuffling the staged output
-        report.fused_nodes = final["nodes"]
-        report.fused_edges = final["edges"]
-        pc = final.get("property_conflicts") or {}
-        report.node_property_conflicts = pc.get("nodes", 0)
-        report.edge_property_conflicts = pc.get("edges", 0)
-        report.integrity = final.get("integrity")
-        report.seconds = time.time() - t0
-        return report
+    # full resume: no chunk re-extracted and the fused snapshot was built
+    # from exactly these chunks with the same fusion parameters — reuse it
+    # instead of re-shuffling the staged output
+    reuse = report.chunks_extracted == 0 and final and final.get("fusion_conf") == fusion_conf
+    if not reuse:
+        if final is not None:
+            # the final tables are about to be overwritten: until both
+            # writes succeed there is no snapshot a rerun could reuse
+            manifest["final"] = None
+            _save_manifest(out_dir, manifest)
 
-    if final is not None:
-        # the final tables are about to be overwritten: until both writes
-        # succeed there is no snapshot a rerun could reuse
-        manifest["final"] = None
+        def staged(kind: str, schema: str) -> DataFrame:
+            # one leaf directory per chunk, read with an explicit schema (no
+            # partition discovery across chunk roots); a kind no chunk
+            # produced (an edge-less mapping) has no directory at all
+            paths = [os.path.join(staging, f"chunk-{c}", f"kind={kind}")
+                     for c in range(n_chunks)]
+            paths = [p for p in paths if os.path.isdir(p)]
+            if not paths:
+                return spark.createDataFrame([], schema)
+            return spark.read.schema(schema).parquet(*paths)
+
+        raw_nodes = staged("node", NODE_SCHEMA)
+        raw_edges = staged("edge", EDGE_SCHEMA)
+        eff_salt = salt
+        if salt == -1:
+            # auto: heavy-hitter sample over the staged raw node ids
+            from .fusion import suggest_salt
+
+            eff_salt = suggest_salt(raw_nodes, ["id"])
+        fnodes, fedges = reconciliate(
+            raw_nodes, raw_edges,
+            reconciliate_sep=reconciliate_sep, raise_errors=raise_errors, salt=eff_salt,
+        )
+        final = _publish(
+            fnodes, fedges, out_dir, reconciliate_sep=reconciliate_sep,
+            property_mergers=property_mergers, prop_sep=prop_sep, sort=sort,
+            validate_output=validate_output, bucketed_out=bucketed_out,
+            neo4j_out=neo4j_out,
+        )
+        final["fusion_conf"] = fusion_conf
+
+    pc = final.get("property_conflicts") or {}
+    report.fused_nodes, report.fused_edges = final["nodes"], final["edges"]
+    report.node_property_conflicts = pc.get("nodes", 0)
+    report.edge_property_conflicts = pc.get("edges", 0)
+    report.integrity = final.get("integrity")
+    report.seconds = time.time() - t0
+    if not reuse:
+        manifest["final"] = {**final, "seconds": report.seconds, "ts": time.time()}
         _save_manifest(out_dir, manifest)
+    return report
 
-    def staged(kind: str, schema: str) -> DataFrame:
-        # one leaf directory per chunk, read with an explicit schema (no
-        # partition discovery across chunk roots); a kind no chunk produced
-        # (an edge-less mapping) has no directory at all
-        paths = [os.path.join(staging, f"chunk-{c}", f"kind={kind}") for c in range(n_chunks)]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*paths)
 
-    raw_nodes = staged("node", NODE_SCHEMA)
-    raw_edges = staged("edge", EDGE_SCHEMA)
-    eff_salt = salt
-    if salt == -1:
-        # auto: heavy-hitter sample over the staged raw node ids
-        from .fusion import suggest_salt
+def _publish(
+    fnodes: DataFrame,
+    fedges: DataFrame,
+    out_dir: str,
+    reconciliate_sep: str = "|",
+    property_mergers: Optional[dict] = None,
+    prop_sep: Optional[str] = None,
+    sort: Optional[str] = None,
+    validate_output: bool = False,
+    bucketed_out: Optional[str] = None,
+    neo4j_out: Optional[str] = None,
+    shacl: Optional[str] = None,
+) -> dict:
+    """Everything after fusion, for :func:`run_pipeline` and the CLI alike.
 
-        eff_salt = suggest_salt(raw_nodes, ["id"])
-    fnodes, fedges = reconciliate(
-        raw_nodes, raw_edges,
-        reconciliate_sep=reconciliate_sep, raise_errors=raise_errors, salt=eff_salt,
-    )
+    Applies ``property_mergers``, then writes the final ``out_dir/nodes``
+    and ``out_dir/edges`` concurrently (rendered with ``prop_sep``, then
+    natural-sorted by id) with their counts and ``EnsureIdentical``
+    conflicts observed on the writes. Only then do the sinks run, in this
+    order: bucketed tables in database ``bucketed_out``, the Neo4j import
+    directory ``neo4j_out``, ``graph_integrity`` (``validate_output``) and
+    the SHACL gate over the shapes file ``shacl`` (violations written to
+    ``out_dir/shacl_violations``). Every sink reads the PRE-render fused
+    frames (raw ids, array-valued properties: the Neo4j ``:string[]``
+    headers need them).
+
+    When any sink is on, each fused frame is pinned with a lazy
+    ``localCheckpoint`` that its final write materializes (not
+    ``persist``: map-of-array rows in the columnar cache made the Neo4j
+    writer an order of magnitude slower), so the fusion shuffle runs once
+    per run whatever sinks follow; with none, the final writes run the
+    plain fused plan.
+
+    Returns the manifest's ``final`` block: ``nodes``, ``edges``,
+    ``property_conflicts``, ``nodes_path``, ``edges_path``, ``integrity``
+    (None unless ``validate_output``) and, with ``shacl``,
+    ``shacl_violations`` plus ``shacl_sample`` (up to five printable
+    violation lines)."""
+    shapes = None
+    if shacl:
+        from .validate import load_shapes
+
+        shapes = load_shapes(shacl)  # a bad shapes file fails before any write
     if property_mergers:
         from .mergers import render_properties
 
         fnodes = render_properties(fnodes, sep=reconciliate_sep,
                                    prop_mergers=property_mergers)
-    if bucketed_out:
-        write_bucketed_graph(fnodes, fedges, database=bucketed_out)
-    if neo4j_out:
-        # PRE-render, like the single-shot CLI: the emitter renders arrays
-        # itself (`:string[]` headers + its own delimiter)
-        from .neo4j_export import write_neo4j_import
+    pin = bool(bucketed_out or neo4j_out or validate_output) or shapes is not None
 
-        write_neo4j_import(fnodes, fedges, neo4j_out)
-    if validate_output:
-        # PRE-render, on raw ids — same order as the single-shot CLI path
-        from .validate import graph_integrity
-
-        report.integrity = graph_integrity(fnodes, fedges)
-    if prop_sep is not None:
-        from .fusion import format_for_export
-
-        fnodes = format_for_export(fnodes, sep=prop_sep)
-        fedges = format_for_export(fedges, sep=prop_sep)
-    if sort:
-        from .ids import natural_sort_key
-
-        asc = sort == "ascend"
-        key_n, key_e = natural_sort_key(fnodes.id), natural_sort_key(fedges.id)
-        fnodes = fnodes.orderBy(key_n.asc() if asc else key_n.desc())
-        fedges = fedges.orderBy(key_e.asc() if asc else key_e.desc())
-
-    def write_final(df: DataFrame, path: str) -> Observation:
+    def write_final(df: DataFrame, path: str) -> tuple[Observation, DataFrame]:
+        # pinned inside the writer thread: under AQE even a lazy checkpoint
+        # runs the fusion shuffle-map stage, and node and edge fusion
+        # should keep running concurrently
+        if pin:
+            df = df.localCheckpoint(eager=False)
+        out = df
+        if prop_sep is not None:
+            out = format_for_export(out, sep=prop_sep)
+        if sort:
+            key = natural_sort_key(out.id)
+            out = out.orderBy(key.asc() if sort == "ascend" else key.desc())
         # total + EnsureIdentical conflict count, observed on the write
         # (conflicts render as !CONFLICT!-marked values; counting them here
         # surfaces what would otherwise merge silently)
         obs = Observation()
         (
-            df.observe(obs, F.count("*").alias("n"),
-                       F.sum(has_property_conflict(df).cast("long")).alias("c"))
+            out.observe(obs, F.count("*").alias("n"),
+                        F.sum(has_property_conflict(out).cast("long")).alias("c"))
             .write.mode("overwrite").partitionBy("label").parquet(path)
         )
-        return obs
+        return obs, df
 
-    final_nodes = os.path.join(out_dir, "nodes")
-    final_edges = os.path.join(out_dir, "edges")
-    node_obs, edge_obs = _concurrently(
-        lambda: write_final(fnodes, final_nodes),
-        lambda: write_final(fedges, final_edges),
+    nodes_path = os.path.join(out_dir, "nodes")
+    edges_path = os.path.join(out_dir, "edges")
+    (node_obs, fnodes), (edge_obs, fedges) = _concurrently(
+        lambda: write_final(fnodes, nodes_path),
+        lambda: write_final(fedges, edges_path),
     )
     n, e = node_obs.get, edge_obs.get
-    report.fused_nodes, report.node_property_conflicts = n["n"], n["c"] or 0
-    report.fused_edges, report.edge_property_conflicts = e["n"], e["c"] or 0
-    report.seconds = time.time() - t0
-
-    manifest["final"] = {
-        "nodes": report.fused_nodes,
-        "edges": report.fused_edges,
-        "property_conflicts": {
-            "nodes": report.node_property_conflicts,
-            "edges": report.edge_property_conflicts,
-        },
-        "nodes_path": final_nodes,
-        "edges_path": final_edges,
-        "fusion_conf": fusion_conf,
-        "integrity": report.integrity,
-        "seconds": report.seconds,
-        "ts": time.time(),
+    final = {
+        "nodes": n["n"], "edges": e["n"],
+        "property_conflicts": {"nodes": n["c"] or 0, "edges": e["c"] or 0},
+        "nodes_path": nodes_path, "edges_path": edges_path,
+        "integrity": None,
     }
-    _save_manifest(out_dir, manifest)
-    return report
+    if bucketed_out:
+        write_bucketed_graph(fnodes, fedges, database=bucketed_out)
+    if neo4j_out:
+        # looked up at call time: traced runs wrap the module attribute
+        from . import neo4j_export
+
+        neo4j_export.write_neo4j_import(fnodes, fedges, neo4j_out)
+    if validate_output:
+        from .validate import graph_integrity
+
+        final["integrity"] = graph_integrity(fnodes, fedges)
+    if shapes is not None:
+        # publish gate: per-node structural contracts (cardinalities and
+        # classes need raw ids and the props map)
+        from .validate import graph_props_frame, shacl_validate
+
+        viol = shacl_validate(
+            fnodes.select("id", "label"), fedges, shapes, props=graph_props_frame(fnodes),
+        ).localCheckpoint()
+        final["shacl_violations"] = viol.count()
+        final["shacl_sample"] = []
+        if final["shacl_violations"]:
+            viol.write.mode("overwrite").parquet(os.path.join(out_dir, "shacl_violations"))
+            final["shacl_sample"] = [
+                f"SHACL {r.violation}: node={r.id} shape={r.shape} "
+                f"path={r.path} observed={r.observed}"
+                for r in viol.limit(5).collect()
+            ]
+    return final

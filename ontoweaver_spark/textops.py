@@ -249,9 +249,13 @@ def corpus_stats(
     int64 ``11757`` differently from float64 ``11757.0`` — the value is
     still the exact integer sum (exact in IEEE double far beyond any
     realistic token budget at profile scale)."""
+    # a NULL text has no token count (``size`` of the NULL split is -1):
+    # it counts in n_docs but, as in DuckDB's sum/avg/quantile_cont, in
+    # none of the token statistics
+    text = F.col(text_col)
     base = df.select(
         F.col(strata_col).alias("stratum"),
-        token_count(F.col(text_col)).alias("n_toks"),
+        F.when(text.isNotNull(), token_count(text)).alias("n_toks"),
     )
     if not exact:
         pct = [F.percentile_approx("n_toks", q).cast("double") for q in (0.5, 0.9, 0.99)]
@@ -284,30 +288,34 @@ def corpus_stats(
     hist = base.groupBy("stratum", "n_toks").agg(F.count("*").alias("cnt"))
     w_ord = Window.partitionBy("stratum").orderBy("n_toks")
     w_all = Window.partitionBy("stratum")
+    counted = F.when(F.col("n_toks").isNotNull(), F.col("cnt"))
     cum = hist.select(
         "stratum",
         "n_toks",
-        F.sum("cnt").over(w_ord).alias("cum"),
+        F.sum(counted).over(w_ord).alias("cum"),
         F.sum("cnt").over(w_all).alias("n_docs"),
+        F.sum(counted).over(w_all).alias("n_counted"),
         F.sum(F.col("cnt") * F.col("n_toks")).over(w_all).alias("total_tokens"),
     )
     # DuckDB order-statistic indices: RN=(n-1)*q (double), lo=v[floor(RN)],
-    # hi=v[ceil(RN)]; a histogram row with cumulative count `cum` covers
-    # 0-based sorted indices [cum-cnt, cum-1], so v[k] = min value with cum>k.
+    # hi=v[ceil(RN)] over the n non-NULL values; a histogram row with
+    # cumulative count `cum` covers 0-based sorted indices [cum-cnt, cum-1],
+    # so v[k] = min value with cum>k (the NULL row, sorted first, adds none).
     aggs = [
         F.max("n_docs").alias("n_docs"),
+        F.max("n_counted").alias("n_counted"),
         F.max("total_tokens").alias("total_tokens"),
     ]
     for q, nm in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
-        rn = (F.col("n_docs") - 1).cast("double") * F.lit(q)
+        rn = (F.col("n_counted") - 1).cast("double") * F.lit(q)
         aggs.append(F.min(F.when(F.col("cum") > F.floor(rn), F.col("n_toks"))).alias(nm + "_lo"))
         aggs.append(F.min(F.when(F.col("cum") > F.ceil(rn), F.col("n_toks"))).alias(nm + "_hi"))
     agg = cum.groupBy("stratum").agg(*aggs)
 
-    mean = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
+    mean = F.col("total_tokens").cast("double") / F.col("n_counted").cast("double")
 
     def quantile(nm: str, q: float) -> Column:
-        rn = (F.col("n_docs") - 1).cast("double") * F.lit(q)
+        rn = (F.col("n_counted") - 1).cast("double") * F.lit(q)
         d = rn - F.floor(rn).cast("double")
         lo = F.col(nm + "_lo").cast("double")
         hi = F.col(nm + "_hi").cast("double")

@@ -156,3 +156,54 @@ def test_neo4j_multivalued_and_quoting(spark, tmp_path):
     by_id = {r[0]: r for r in rows}
     assert by_id["a"][3] == "x;y"  # array delimiter join
     assert by_id["a"][2] == 'has,comma and "quote"'  # csv module re-parses it
+
+
+def _neo4j_dir(out):
+    """Every group's header and sorted rows, plus the import script with
+    the directory name factored out."""
+    groups = {}
+    for gdir in sorted(glob.glob(os.path.join(out, "*_*"))):
+        header, rows = _read_group(gdir)
+        groups[os.path.basename(gdir)] = (header, sorted(rows))
+    with open(os.path.join(out, "neo4j-import.sh")) as f:
+        return groups, f.read().replace(out, "<DIR>")
+
+
+def test_run_with_sinks_fuses_once(spark, tmp_path):
+    """With Neo4j export, integrity and --prop-sep rendering all on,
+    run_pipeline writes the same Neo4j directory and integrity report as
+    the writers give on freshly fused frames, but fuses once: every sink
+    reads the fused frames the final writes pinned, instead of re-running
+    the fusion shuffle per label group and per check."""
+    from ontoweaver_spark.compiler import compile_mapping
+    from ontoweaver_spark.fusion import reconciliate
+    from ontoweaver_spark.neo4j_export import write_neo4j_import
+    from ontoweaver_spark.pages import WEB_KG_MAPPING, generate_pages
+    from ontoweaver_spark.pipeline import run_pipeline
+    from ontoweaver_spark.validate import graph_integrity
+
+    mapping = {**WEB_KG_MAPPING, "validate": {"lang": {"isin": ["en", "es", "fr", "de"]}}}
+    inp = str(tmp_path / "pages")
+    generate_pages(spark, 240, seed=7, partitions=4).write.parquet(inp)
+    pages = spark.read.parquet(inp)
+
+    sc = spark.sparkContext
+    group = "sinks-fuse-once"
+    sc.setJobGroup(group, "run_pipeline with every sink")
+    try:
+        rep = run_pipeline(spark, pages, mapping, str(tmp_path / "kg"), n_chunks=1,
+                           neo4j_out=str(tmp_path / "neo4j"), validate_output=True,
+                           prop_sep=";")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res = compile_mapping(pages, mapping, validate_mode="filter")
+    fnodes, fedges = reconciliate(res.nodes, res.edges, raise_errors=False)
+    write_neo4j_import(fnodes, fedges, str(tmp_path / "fresh"))
+    assert _neo4j_dir(str(tmp_path / "neo4j")) == _neo4j_dir(str(tmp_path / "fresh"))
+    assert rep.integrity == graph_integrity(fnodes, fedges)
+    assert rep.integrity["ok"] and rep.fused_nodes == rep.integrity["nodes"]
+    # local[4], this fixture: 54 jobs when every sink re-ran fusion from
+    # staging, 30 with the sinks reading the pinned fused frames
+    assert jobs <= 30, f"{jobs} Spark jobs"

@@ -257,6 +257,34 @@ def test_corpus_stats_exact_and_approx(spark):
         assert abs(approx[s]["p50_tokens"] - exact[s]["p50_tokens"]) <= 10
 
 
+
+def test_corpus_stats_null_text_matches_duckdb(spark):
+    """A NULL text counts as a document but carries no token count: Spark's
+    ``size`` of the NULL split is -1, which used to enter the sum and the
+    order statistics. Both paths must agree with DuckDB, which skips NULLs
+    in ``sum``, ``avg`` and ``quantile_cont``."""
+    import duckdb
+
+    from ontoweaver_spark.textops import corpus_stats
+
+    texts = ["a", "a b", "a b c", None, "a b c d e f g"]
+    rows = [(i, "en", t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string, text string")
+    want = duckdb.sql(r"""
+        SELECT count(*), sum(n), avg(n), quantile_cont(n, 0.5) FROM (
+          SELECT len(regexp_split_to_array(trim(t), '\s+')) AS n
+          FROM (VALUES ('a'), ('a b'), ('a b c'), (NULL), ('a b c d e f g')) v(t))
+    """).fetchone()
+    assert want == (5, 13, 3.25, 2.5)
+
+    exact = corpus_stats(df).collect()[0]
+    assert (exact["n_docs"], exact["total_tokens"], exact["mean_tokens"],
+            exact["p50_tokens"]) == want
+    assert exact["p90_tokens"] == 5.8  # 3 + 0.7 * (7 - 3) over [1, 2, 3, 7]
+    approx = corpus_stats(df, exact=False).collect()[0]
+    assert (approx["n_docs"], approx["total_tokens"], approx["mean_tokens"]) == want[:3]
+    assert approx["p50_tokens"] in (2.0, 3.0)  # a value of [1, 2, 3, 7]
+
 def test_pagerank_partition_invariance(spark):
     """The fixed-point claim in full: ranks are BIT-identical regardless
     of input partitioning (integer sums are exact and commutative — the

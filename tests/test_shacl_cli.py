@@ -75,3 +75,21 @@ def test_shapes_file_unknown_key_fails_loudly(tmp_path):
 
     with pytest.raises(ValueError, match="unknown keys.*mincount"):
         load_shapes(str(bad))
+
+
+def test_shacl_with_chunks_is_rejected(tmp_path, capsys):
+    """The chunked path has no SHACL gate: rather than exit 0 without ever
+    checking the shapes, the combination fails at argument parsing, before
+    a Spark session starts."""
+    import pytest
+
+    from ontoweaver_spark.__main__ import main
+
+    shapes = tmp_path / "shapes.yaml"
+    shapes.write_text(SHAPES_VIOLATED)
+    with pytest.raises(SystemExit) as exc:
+        main([f"{tmp_path / 'data.csv'}:{tmp_path / 'mapping.yaml'}",
+              "--out", str(tmp_path / "out"), "--chunks", "2", "--shacl", str(shapes)])
+    assert exc.value.code == 2
+    assert "--shacl cannot be combined with --chunks" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()

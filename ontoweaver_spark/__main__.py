@@ -5,9 +5,12 @@
         [--reconciliate-sep "|"] [--chunks N] [--salt K] \
         [--register module.py] [--sub-sample PCT] [--master local[*]]
 
-Each DATA:MAPPING pair is extracted; results union before one global
-reconciliation (multi-source fusion, reference __init__.py:504-530); final
-nodes/edges land in OUT_DIR as label-partitioned parquet with a manifest.
+Every invocation is one ``pipeline.run_pipeline`` call: each DATA:MAPPING
+pair is validated and extracted once into resumable chunks, and one global
+reconciliation fuses them all (multi-source fusion, reference
+__init__.py:504-530); final nodes/edges land in OUT_DIR as label-partitioned
+parquet with a manifest. A rerun into the same OUT_DIR skips chunks already
+extracted from unchanged inputs.
 """
 
 from __future__ import annotations
@@ -106,11 +109,13 @@ def main(argv=None) -> int:
     ap.add_argument("--affix", default="none", choices=["none", "prefix", "suffix"])
     ap.add_argument("--affix-sep", default=":")
     ap.add_argument("--reconciliate-sep", default="|")
-    ap.add_argument("--chunks", type=int, default=1, help="resumable extraction chunks")
+    ap.add_argument("--chunks", type=int, default=1,
+                    help="resumable extraction chunks per DATA:MAPPING pair "
+                         "(each input is staged once, split by a row hash)")
     ap.add_argument("--salt", type=int, default=0,
                     help="fusion salt partitions for hub skew; -1 picks one "
-                         "automatically from a heavy-hitter sample "
-                         "(fusion.suggest_salt)")
+                         "automatically from a heavy-hitter sample of the "
+                         "staged node ids")
     ap.add_argument("--bucketed-out", default=None, metavar="DATABASE",
                     help="also materialize the fused graph as bucketed "
                          "tables (nodes bucketBy id, edges bucketBy src) in "
@@ -180,9 +185,6 @@ def main(argv=None) -> int:
         ap.error("--out is required (flag, ONTOWEAVE_OUT, or config `out:`)")
     if args.neo4j_import_run and not args.neo4j_out:
         ap.error("--neo4j-import-run requires --neo4j-out")
-    if args.chunks > 1 and args.shacl:
-        # the chunked path runs run_pipeline, which has no SHACL gate
-        ap.error("--shacl cannot be combined with --chunks")
 
     from . import registry
     from .loaders import read_table, sub_sample
@@ -237,75 +239,30 @@ def main(argv=None) -> int:
         spark.stop()
         return 1 if any_invalid else 0
 
-    from .pipeline import _publish, _save_manifest, run_pipeline
+    from .pipeline import run_pipeline
 
-    # the post-fusion options both paths hand to the one post-fusion chain
-    sinks = dict(prop_sep=args.prop_sep, sort=args.sort,
-                 validate_output=args.validate_output,
-                 bucketed_out=args.bucketed_out, neo4j_out=args.neo4j_out)
-    if args.chunks > 1:
-        # resumable chunked path (single source): manifest-tracked extraction
-        if len(args.pairs) != 1:
-            ap.error("--chunks requires exactly one DATA:MAPPING pair")
-        df, spec = read_pair(args.pairs[0])
-        report = run_pipeline(
-            spark, df, spec, args.out,
-            affix=args.affix, type_affix_sep=args.affix_sep,
-            reconciliate_sep=args.reconciliate_sep,
-            n_chunks=args.chunks, salt=args.salt,
-            raise_errors=not args.pass_errors,
-            validate_mode=args.validate_mode, **sinks,
-        )
-        out_json = {
-            "nodes": report.fused_nodes, "edges": report.fused_edges,
-            "out": args.out, "chunks_resumed": report.chunks_resumed,
-            "chunks_extracted": report.chunks_extracted,
-        }
-        gates = {"integrity": report.integrity} if report.integrity is not None else {}
-    else:
-        from .compiler import compile_mapping
-        from .fusion import reconciliate
-
-        all_nodes, all_edges = None, None
-        for pair in args.pairs:
-            df, spec = read_pair(pair)
-            res = compile_mapping(
-                df, spec, affix=args.affix, type_affix_sep=args.affix_sep,
-                validate_mode=args.validate_mode,
-            )
-            all_nodes = res.nodes if all_nodes is None else all_nodes.unionByName(res.nodes)
-            all_edges = res.edges if all_edges is None else all_edges.unionByName(res.edges)
-
-        salt = args.salt
-        if salt == -1:
-            # heavy-hitter sample over the raw node ids picks the factor that
-            # bounds the hottest fused group's per-task size. Cache first:
-            # sampling happens AFTER the extraction transforms, so without it
-            # the estimate would re-run the whole extraction a second time.
-            # (The chunked path avoids this by sampling its staged parquet.)
-            from .fusion import suggest_salt
-
-            all_nodes = all_nodes.persist()
-            salt = suggest_salt(all_nodes, ["id"])
-        fnodes, fedges = reconciliate(
-            all_nodes, all_edges,
-            reconciliate_sep=args.reconciliate_sep,
-            raise_errors=not args.pass_errors, salt=salt,
-        )
-        final = _publish(fnodes, fedges, args.out, shacl=args.shacl, **sinks)
-        for line in final.pop("shacl_sample", []):
-            print(line, file=sys.stderr)
-        gates = {k: final.pop(k) for k in ("integrity", "shacl_violations")
-                 if final.get(k) is not None}
-        _save_manifest(args.out, {"chunks": {}, "final": final,
-                                  "inputs": args.pairs, **gates})
-        out_json = {"nodes": final["nodes"], "edges": final["edges"], "out": args.out}
-
-    print(json.dumps({**out_json, **gates}))
+    tables, specs = zip(*map(read_pair, args.pairs))
+    report = run_pipeline(
+        spark, list(tables), list(specs), args.out,
+        affix=args.affix, type_affix_sep=args.affix_sep,
+        reconciliate_sep=args.reconciliate_sep,
+        n_chunks=args.chunks, salt=args.salt,
+        raise_errors=not args.pass_errors, validate_mode=args.validate_mode,
+        prop_sep=args.prop_sep, sort=args.sort,
+        validate_output=args.validate_output, bucketed_out=args.bucketed_out,
+        neo4j_out=args.neo4j_out, shacl=args.shacl,
+    )
+    for line in report.shacl_sample:
+        print(line, file=sys.stderr)
+    result = {"nodes": report.fused_nodes, "edges": report.fused_edges, "out": args.out,
+              "chunks_resumed": report.chunks_resumed,
+              "chunks_extracted": report.chunks_extracted,
+              "integrity": report.integrity, "shacl_violations": report.shacl_violations}
+    print(json.dumps({k: v for k, v in result.items() if v is not None}))
     spark.stop()
-    if "integrity" in gates and not gates["integrity"]["ok"]:
+    if report.integrity is not None and not report.integrity["ok"]:
         return 1
-    if gates.get("shacl_violations") and not args.shacl_report_only:
+    if report.shacl_violations and not args.shacl_report_only:
         return 3
     if args.neo4j_import_run:
         from .neo4j_export import run_import_script

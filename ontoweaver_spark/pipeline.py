@@ -3,9 +3,11 @@ with per-partition lineage + metrics and chunk-level resume.
 
 The reference funnels everything into BioCypher writers
 (/root/reference/src/ontoweaver/__init__.py:640-673) with no checkpointing;
-this module is the Spark-native analog required by the north rule. Every
-phase is ONE pass over its data; the manifest's counts are taken with
-``Observation``s on the writes that run anyway, never by re-scanning.
+this module is the Spark-native analog required by the north rule, and the
+one driver of a KG job: the ``ontoweave`` CLI runs every invocation through
+:func:`run_pipeline`. Every phase is ONE pass over its data; the manifest's
+counts are taken with ``Observation``s on the writes that run anyway, never
+by re-scanning.
 
 - **Phase 0 (stage input, multi-chunk runs only).** The input is written
   once to ``staging_input``, partitioned by chunk id (hash of a stable key),
@@ -14,16 +16,18 @@ phase is ONE pass over its data; the manifest's counts are taken with
   Each chunk's subject nodes, object nodes and edges come out of a single
   explode (``ExtractResult.elements``) and are written once, partitioned by
   kind, to ``staging/chunk-<c>/kind={node,edge}``. The chunk is recorded in
-  a JSON manifest with lineage (input path, mapping hash, chunk id) and
-  metrics. A re-run skips chunks already in the manifest — extraction work
-  is never repeated after a crash.
+  a JSON manifest with lineage (mapping hash, options, source and chunk
+  id) and metrics. A re-run skips chunks already in the manifest unless
+  ``extract_conf`` changed: the mapping, an option, a registered
+  transformer's source file, or how the input frame was built (its plan,
+  reader options and files: :func:`_input_fingerprint`).
 - **Phase 2 (fuse)** reads every ``staging/chunk-<c>/kind=node`` (and
   ``kind=edge``) directory and runs the global reconciliation. The fused
   nodes and the fused edges are written concurrently (two independent
   jobs: the hub-skewed node reduce leaves cores the edge fusion uses) as
   parquet partitioned by label (partition pruning for per-type consumers);
-  the optional sinks (bucketed tables, Neo4j export, integrity) then read
-  the fused frames pinned by those writes (:func:`_publish`).
+  the optional sinks (bucketed tables, Neo4j export, integrity, SHACL)
+  then read the fused frames pinned by those writes (:func:`_publish`).
   ``manifest["final"]`` is saved only once the writes and sinks succeed.
 
 Where each manifest count comes from:
@@ -45,16 +49,19 @@ plays the role of an Iceberg snapshot boundary.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
 from dataclasses import asdict, dataclass, field
 from typing import Optional, Union
+from urllib.parse import unquote, urlparse
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import registry
 from .compiler import EDGE_SCHEMA, NODE_SCHEMA, compile_mapping
 from .fusion import format_for_export, has_property_conflict, reconciliate
 from .ids import natural_sort_key
@@ -83,6 +90,8 @@ class RunReport:
     seconds: float = 0.0
     partition_metrics: list = field(default_factory=list)
     integrity: Optional[dict] = None
+    shacl_violations: Optional[int] = None
+    shacl_sample: list = field(default_factory=list)
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -103,6 +112,30 @@ def _save_manifest(out_dir: str, manifest: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     os.replace(tmp, _manifest_path(out_dir))
+
+
+def _input_fingerprint(df: DataFrame) -> str:
+    """What resume keys a source on, as one sha256: the frame's schema and
+    canonical analyzed plan (a sample's fraction and seed, a generator's
+    size), each file relation's reader options (a CSV ``sep``) and its
+    sorted input files, local ones with size and mtime. Driver-side only,
+    no Spark job. Not covered, so rerun those into a fresh out_dir: the
+    rows of an in-memory frame (its plan holds none), a changed remote file
+    kept under its name, and a scan that lists no files (a non-file DSv2
+    table such as Iceberg)."""
+    plan = df._jdf.queryExecution().analyzed()
+    parts = [df.schema.json(), plan.canonicalized().toString()]
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            if (rel := leaf.relation()).getClass().getSimpleName() == "HadoopFsRelation":
+                parts.append(rel.options().toString())
+    for uri in sorted(df.inputFiles()):
+        url = urlparse(uri)
+        st = os.stat(unquote(url.path)) if url.scheme in ("", "file") else None
+        parts.append(f"{uri} {st and st.st_size} {st and st.st_mtime_ns}")
+    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
 
 
 def _observe_partitions(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -163,7 +196,6 @@ def _clear_orphan_location(spark: SparkSession, table: str) -> None:
     if spark.catalog.tableExists(table):
         return
     import shutil
-    from urllib.parse import urlparse
 
     parts = table.lower().split(".")
     name = parts[-1]
@@ -228,7 +260,6 @@ def write_graph_catalog_tables(
     same call with ``fmt=None`` exercises the identical code path against
     the session catalog's default source — the gate is the cluster
     classpath, not this code."""
-    from pyspark.sql import functions as F
     from pyspark.errors.exceptions.captured import AnalysisException
 
     spark = fnodes.sparkSession
@@ -256,8 +287,8 @@ def write_graph_catalog_tables(
 
 def run_pipeline(
     spark: SparkSession,
-    input_df: Union[DataFrame, str],
-    mapping: Union[dict, str, MappingSpec],
+    input_df: Union[DataFrame, str, list],
+    mapping: Union[dict, str, MappingSpec, list],
     out_dir: str,
     affix: str = "none",
     type_affix_sep: str = ":",
@@ -273,18 +304,21 @@ def run_pipeline(
     validate_output: bool = False,
     bucketed_out: Optional[str] = None,
     neo4j_out: Optional[str] = None,
+    shacl: Optional[str] = None,
 ) -> RunReport:
     """Run the full pipeline with checkpoint/resume.
 
-    Everything after fusion is :func:`_publish`, the one post-fusion chain
-    the CLI runs too: ``prop_sep`` renders multi-valued properties joined
-    with it and ``sort`` ("ascend"/"descend") natural-orders the final
-    tables by id; then, from the PRE-render fused frames (raw ids,
-    array-valued properties), ``bucketed_out`` materializes bucketed
-    tables in that database, ``neo4j_out`` writes the Neo4j bulk-import
-    directory (multi-valued props get ``:string[]`` headers) and
-    ``validate_output`` runs the final-graph invariants into
-    ``report.integrity``. Fusion runs once whichever of them are on.
+    ``input_df`` and ``mapping`` may be equal-length lists of sources
+    (multi-source fusion): each is validated, staged (to
+    ``staging_input-<s>``) and extracted on its own, its chunk ``c`` is
+    chunk ``s * n_chunks + c`` of the run, its validation block is
+    ``manifest["validation"][str(s)]``, and one reconciliation fuses all.
+
+    Everything after fusion is :func:`_publish`: the ``prop_sep`` render
+    and ``sort`` of the final tables, then the ``bucketed_out``,
+    ``neo4j_out`` and ``validate_output`` sinks (``report.integrity``) and
+    the SHACL gate over the shapes file ``shacl`` (``report.shacl_violations``;
+    the file is parsed before any write). Fusion runs once whichever are on.
 
     ``chunk_key``: stable column used to split the input into resumable
     chunks (e.g. ``url``). With ``n_chunks=1`` staging is a single snapshot.
@@ -300,126 +334,130 @@ def run_pipeline(
     as ``property_conflicts`` instead of merging silently.
     """
     t0 = time.time()
-    if isinstance(input_df, str):
-        input_df = spark.read.parquet(input_df)
-    spec = mapping if isinstance(mapping, MappingSpec) else load_mapping(mapping)
-    mhash = spec.spec_hash()
+    shapes = None
+    if shacl:
+        from .validate import load_shapes
+
+        shapes = load_shapes(shacl)  # a bad shapes file fails before any write
+    pairs = (list(zip(input_df, mapping, strict=True))
+             if isinstance(input_df, (list, tuple)) else [(input_df, mapping)])
+    tables = [spark.read.parquet(t) if isinstance(t, str) else t for t, _ in pairs]
+    specs = [m if isinstance(m, MappingSpec) else load_mapping(m) for _, m in pairs]
+    many = len(pairs) > 1
+    mhash = "+".join(spec.spec_hash() for spec in specs)
 
     staging = os.path.join(out_dir, "staging")
     manifest = _load_manifest(out_dir)
-    # ANY parameter that affects chunk content invalidates the resume —
-    # re-running the same out_dir with a different --affix must not reuse
-    # chunks extracted under the old one
-    extract_conf = {
+    # ANYTHING that shapes chunk content is in the key: a rerun with another
+    # --affix, --sub-sample, --register module or rewritten input re-extracts
+    chunk_conf = {
         "mapping_hash": mhash, "affix": affix, "type_affix_sep": type_affix_sep,
         "n_chunks": n_chunks, "chunk_key": chunk_key,
         "validate_mode": validate_mode, "staging": STAGING_LAYOUT,
     }
-    prior = manifest.get("extract_conf") or (
-        # legacy manifests keyed only on mapping_hash: treat as mismatched
-        # unless it is genuinely the same spec with default everything
-        None if manifest.get("mapping_hash") is None else {"legacy": True}
-    )
-    if prior not in (None, extract_conf):
+    extract_conf = {**chunk_conf, "inputs": [_input_fingerprint(t) for t in tables],
+                    "transformers": registry.fingerprint()}
+    if manifest.get("extract_conf") != extract_conf:
         manifest = {"chunks": {}, "final": None}
     manifest["extract_conf"] = extract_conf
     manifest["mapping_hash"] = mhash
 
-    report = RunReport(out_dir=out_dir, mapping_hash=mhash, chunks_total=n_chunks)
-
-    todo = [c for c in range(n_chunks) if not manifest["chunks"].get(str(c), {}).get("done")]
-
-    # ---- input validation: counted on the first action that scans the input
+    report = RunReport(out_dir=out_dir, mapping_hash=mhash,
+                       chunks_total=n_chunks * len(pairs))
     validation = None  # Observation, until its counts reach the manifest
-    if spec.input_rules and validate_mode == "report":
-        # staged input was written from already-validated rows: a crash-resume
-        # with chunks left must not re-scan the raw input just to recompute
-        # counts the manifest already holds
-        if todo and not manifest.get("input_staged"):
-            from .validate import validation_aggs, validity
 
-            validation = Observation()
-            input_df = input_df.observe(
-                validation, *validation_aggs(spec.input_rules)
-            ).where(validity(spec.input_rules))
-        # rules already applied (or nothing left to extract); chunks compile
-        # with a plain filter (no-op)
-        chunk_validate_mode = "filter"
-    else:
-        chunk_validate_mode = validate_mode
-
-    def record_validation():
+    def record_validation(s: int):
         # call only after the action carrying the observation has succeeded
         nonlocal validation
         if validation is not None:
             from .validate import ValidationReport
 
-            manifest["validation"] = asdict(ValidationReport.from_row(
-                validation.get, spec.input_rules))
+            block = asdict(ValidationReport.from_row(validation.get, specs[s].input_rules))
+            manifest["validation"] = (
+                {**manifest.get("validation", {}), str(s): block} if many else block)
             validation = None
 
-    # ---- phase 0 / 1: chunked extraction with resume ---------------------------
-    # Multi-chunk runs stage the input ONCE, written partitioned by chunk id
-    # (one full input scan total). Each chunk's extraction then reads only
-    # its own partition directory (partition pruning) — the previous
-    # where(pmod(hash)) approach re-scanned the ENTIRE input once per chunk:
-    # n_chunks full scans of a 100 TB table.
-    if n_chunks > 1 and todo:
-        stage_in = os.path.join(out_dir, "staging_input")
-        if not manifest.get("input_staged"):
-            key = F.col(chunk_key) if chunk_key else F.concat_ws("\x1f", *input_df.columns)
-            (
-                input_df
-                .withColumn("_ow_chunk", F.pmod(F.xxhash64(key), F.lit(n_chunks)))
-                .write.mode("overwrite").partitionBy("_ow_chunk").parquet(stage_in)
-            )
-            record_validation()
-            manifest["input_staged"] = True
-            _save_manifest(out_dir, manifest)
-        staged_input = spark.read.parquet(stage_in)
-
-    for chunk in range(n_chunks):
-        ckey = str(chunk)
-        if manifest["chunks"].get(ckey, {}).get("done"):
-            report.chunks_resumed += 1
+    # ---- phase 0 / 1: per source, chunked extraction with resume ------------
+    for s, (table, spec) in enumerate(zip(tables, specs)):
+        first = s * n_chunks
+        todo = [c for c in range(first, first + n_chunks)
+                if not manifest["chunks"].get(str(c), {}).get("done")]
+        report.chunks_resumed += n_chunks - len(todo)
+        if not todo:
             continue
+        staged_sources = manifest.get("input_staged", [])
 
-        if n_chunks > 1:
-            part = staged_input.where(F.col("_ow_chunk") == chunk).drop("_ow_chunk")
+        # ---- input validation: counted on the first action that scans it
+        if spec.input_rules and validate_mode == "report":
+            # staged input was written from already-validated rows: a
+            # crash-resume must not re-scan the raw input just to recompute
+            # counts the manifest already holds
+            if s not in staged_sources:
+                from .validate import validation_aggs, validity
+
+                validation = Observation()
+                table = table.observe(
+                    validation, *validation_aggs(spec.input_rules)
+                ).where(validity(spec.input_rules))
+            # rules already applied; chunks compile with a plain filter (no-op)
+            chunk_validate_mode = "filter"
         else:
-            part = input_df
-        part, rows_obs = _observe_partitions(part)
+            chunk_validate_mode = validate_mode
 
-        res = compile_mapping(
-            part, spec, affix=affix, type_affix_sep=type_affix_sep,
-            validate_mode=chunk_validate_mode,
-        )
-        kinds = Observation()
-        kind = F.col("kind")
-        (
-            res.elements.observe(
-                kinds,
-                F.count_if(kind == "node").alias("nodes"),
-                F.count_if(kind == "edge").alias("edges"),
+        # Multi-chunk runs stage the input ONCE, partitioned by chunk id (one
+        # full input scan); each chunk then reads only its own directory.
+        if n_chunks > 1:
+            stage_in = os.path.join(out_dir, "staging_input" + (f"-{s}" if many else ""))
+            if s not in staged_sources:
+                key = F.col(chunk_key) if chunk_key else F.concat_ws("\x1f", *table.columns)
+                (
+                    table
+                    .withColumn("_ow_chunk", F.pmod(F.xxhash64(key), F.lit(n_chunks)))
+                    .write.mode("overwrite").partitionBy("_ow_chunk").parquet(stage_in)
+                )
+                record_validation(s)
+                manifest["input_staged"] = [*staged_sources, s]
+                _save_manifest(out_dir, manifest)
+            staged_input = spark.read.parquet(stage_in)
+
+        for chunk in todo:
+            if n_chunks > 1:
+                part = (staged_input.where(F.col("_ow_chunk") == chunk - first)
+                        .drop("_ow_chunk"))
+            else:
+                part = table
+            part, rows_obs = _observe_partitions(part)
+
+            res = compile_mapping(
+                part, spec, affix=affix, type_affix_sep=type_affix_sep,
+                validate_mode=chunk_validate_mode,
             )
-            .write.mode("overwrite").partitionBy("kind")
-            .parquet(os.path.join(staging, f"chunk-{chunk}"))
-        )
-        record_validation()
-        pm = partition_metrics(rows_obs.get)
-        counts = kinds.get
-        manifest["chunks"][ckey] = {
-            "done": True,
-            "rows_in": sum(m["rows"] for m in pm),
-            "nodes": counts["nodes"],
-            "edges": counts["edges"],
-            "partitions": pm,
-            "lineage": {**extract_conf, "chunk": chunk},
-            "ts": time.time(),
-        }
-        _save_manifest(out_dir, manifest)
-        report.chunks_extracted += 1
-        report.partition_metrics.extend(pm)
+            kinds = Observation()
+            kind = F.col("kind")
+            (
+                res.elements.observe(
+                    kinds,
+                    F.count_if(kind == "node").alias("nodes"),
+                    F.count_if(kind == "edge").alias("edges"),
+                )
+                .write.mode("overwrite").partitionBy("kind")
+                .parquet(os.path.join(staging, f"chunk-{chunk}"))
+            )
+            record_validation(s)
+            pm = partition_metrics(rows_obs.get)
+            counts = kinds.get
+            manifest["chunks"][str(chunk)] = {
+                "done": True,
+                "rows_in": sum(m["rows"] for m in pm),
+                "nodes": counts["nodes"],
+                "edges": counts["edges"],
+                "partitions": pm,
+                "lineage": {**chunk_conf, "source": s, "chunk": chunk},
+                "ts": time.time(),
+            }
+            _save_manifest(out_dir, manifest)
+            report.chunks_extracted += 1
+            report.partition_metrics.extend(pm)
 
     report.rows_in = sum(c.get("rows_in", 0) for c in manifest["chunks"].values())
     report.raw_nodes = sum(c.get("nodes", 0) for c in manifest["chunks"].values())
@@ -427,7 +465,7 @@ def run_pipeline(
 
     # ---- phase 2: global fusion + final write -------------------------------
     fusion_conf = {"reconciliate_sep": reconciliate_sep, "salt": salt,
-                   "n_chunks": n_chunks,
+                   "n_chunks": n_chunks, "raise_errors": raise_errors,
                    # merger functions aren't hashable across runs; keying on
                    # the property-name set invalidates the snapshot when the
                    # merged property SET changes (same-name merger swaps
@@ -437,7 +475,10 @@ def run_pipeline(
                    "prop_sep": prop_sep, "sort": sort,
                    "validate_output": validate_output,
                    "bucketed_out": bucketed_out,
-                   "neo4j_out": neo4j_out}
+                   "neo4j_out": neo4j_out,
+                   # keyed by content: shapes edited in place re-run the gate
+                   "shacl": shapes and hashlib.sha256(
+                       json.dumps(shapes, sort_keys=True, default=str).encode()).hexdigest()}
     final = manifest.get("final")
     # full resume: no chunk re-extracted and the fused snapshot was built
     # from exactly these chunks with the same fusion parameters — reuse it
@@ -455,7 +496,7 @@ def run_pipeline(
             # partition discovery across chunk roots); a kind no chunk
             # produced (an edge-less mapping) has no directory at all
             paths = [os.path.join(staging, f"chunk-{c}", f"kind={kind}")
-                     for c in range(n_chunks)]
+                     for c in range(report.chunks_total)]
             paths = [p for p in paths if os.path.isdir(p)]
             if not paths:
                 return spark.createDataFrame([], schema)
@@ -477,7 +518,7 @@ def run_pipeline(
             fnodes, fedges, out_dir, reconciliate_sep=reconciliate_sep,
             property_mergers=property_mergers, prop_sep=prop_sep, sort=sort,
             validate_output=validate_output, bucketed_out=bucketed_out,
-            neo4j_out=neo4j_out,
+            neo4j_out=neo4j_out, shapes=shapes,
         )
         final["fusion_conf"] = fusion_conf
 
@@ -486,6 +527,8 @@ def run_pipeline(
     report.node_property_conflicts = pc.get("nodes", 0)
     report.edge_property_conflicts = pc.get("edges", 0)
     report.integrity = final.get("integrity")
+    report.shacl_violations = final.get("shacl_violations")
+    report.shacl_sample = final.get("shacl_sample", [])
     report.seconds = time.time() - t0
     if not reuse:
         manifest["final"] = {**final, "seconds": report.seconds, "ts": time.time()}
@@ -504,9 +547,9 @@ def _publish(
     validate_output: bool = False,
     bucketed_out: Optional[str] = None,
     neo4j_out: Optional[str] = None,
-    shacl: Optional[str] = None,
+    shapes: Optional[list] = None,
 ) -> dict:
-    """Everything after fusion, for :func:`run_pipeline` and the CLI alike.
+    """Everything after fusion in :func:`run_pipeline`.
 
     Applies ``property_mergers``, then writes the final ``out_dir/nodes``
     and ``out_dir/edges`` concurrently (rendered with ``prop_sep``, then
@@ -514,28 +557,25 @@ def _publish(
     conflicts observed on the writes. Only then do the sinks run, in this
     order: bucketed tables in database ``bucketed_out``, the Neo4j import
     directory ``neo4j_out``, ``graph_integrity`` (``validate_output``) and
-    the SHACL gate over the shapes file ``shacl`` (violations written to
-    ``out_dir/shacl_violations``). Every sink reads the PRE-render fused
-    frames (raw ids, array-valued properties: the Neo4j ``:string[]``
-    headers need them).
+    the SHACL gate over ``shapes`` (``validate.load_shapes``; violations
+    written to ``out_dir/shacl_violations``). Every sink reads the
+    PRE-render fused frames (raw ids, array-valued properties: the Neo4j
+    ``:string[]`` headers need them).
 
-    When any sink is on, each fused frame is pinned with a lazy
-    ``localCheckpoint`` that its final write materializes (not
+    When any sink is on, each fused frame is pinned with
+    ``localCheckpoint(eager=False)`` inside its writer thread (not
     ``persist``: map-of-array rows in the columnar cache made the Neo4j
     writer an order of magnitude slower), so the fusion shuffle runs once
     per run whatever sinks follow; with none, the final writes run the
-    plain fused plan.
+    plain fused plan. The pin is not lazy: under AQE building it already
+    runs the fusion shuffle-map stages, before the final write starts, and
+    that write runs the rest.
 
     Returns the manifest's ``final`` block: ``nodes``, ``edges``,
     ``property_conflicts``, ``nodes_path``, ``edges_path``, ``integrity``
-    (None unless ``validate_output``) and, with ``shacl``,
+    (None unless ``validate_output``) and, with ``shapes``,
     ``shacl_violations`` plus ``shacl_sample`` (up to five printable
     violation lines)."""
-    shapes = None
-    if shacl:
-        from .validate import load_shapes
-
-        shapes = load_shapes(shacl)  # a bad shapes file fails before any write
     if property_mergers:
         from .mergers import render_properties
 

@@ -14,8 +14,11 @@ genuinely needed — never per-row Python UDFs.
 
 from __future__ import annotations
 
+import hashlib
 import importlib.util
+import inspect
 import sys
+from pathlib import Path
 from typing import Callable
 
 USER_TRANSFORMERS: dict[str, Callable] = {}
@@ -32,6 +35,21 @@ def register_all(mapping: dict[str, Callable]) -> None:
 
 def unregister(name: str) -> None:
     USER_TRANSFORMERS.pop(name, None)
+
+
+def fingerprint() -> str:
+    """sha256 over each registered transformer's name and the bytes of the
+    source file that defines it: a resumed pipeline run re-extracts when a
+    ``--register`` module was edited. A transformer without a source file
+    counts by name only, and modules it imports are not covered."""
+    h = hashlib.sha256()
+    for name, fn in sorted(USER_TRANSFORMERS.items()):
+        h.update(name.encode() + b"\0")
+        try:
+            h.update(Path(inspect.getsourcefile(fn)).read_bytes())
+        except (TypeError, OSError):
+            pass
+    return h.hexdigest()
 
 
 def import_from_path(path: str) -> None:

@@ -87,11 +87,16 @@ def stats_reset_checkpoint(df, eager: bool = True):
     integers and per-round wall time doubles — the loop dies at ~20
     rounds no matter how small the data is).
 
-    The fix re-wraps the checkpointed (already materialized) RDD of
-    InternalRows as a fresh scan with default leaf statistics — zero
-    recompute, zero serialization, JVM-side only. Falls back to the plain
-    checkpointed frame if the private JVM hook is unavailable (slow at
-    high round counts, never wrong).
+    The fix re-wraps the checkpointed RDD of InternalRows as a fresh scan
+    with default leaf statistics — zero recompute, zero serialization,
+    JVM-side only. Falls back to the plain checkpointed frame if the
+    private JVM hook is unavailable (slow at high round counts, never
+    wrong).
+
+    ``eager=False`` is not lazy under AQE (on in :func:`get_spark`):
+    building the checkpoint already runs every shuffle-map stage of the
+    plan, as a job of its own at call time (a ``groupBy().count()`` frame
+    submits one); only the final stage waits for the first action.
 
     Every capped iterative loop in this repo runs through :func:`fixpoint`:
     its probe mode checkpoints each round's state through this, and steps
@@ -144,10 +149,11 @@ def fixpoint(
       (for steps that test their INPUT, the last round's output is
       otherwise never tested).
     - ``probe`` (a column of a DataFrame state): each round's state is
-      checkpointed lazily through :func:`stats_reset_checkpoint`, and the
-      ``(count, sum(probe))`` aggregate — the action that materializes
-      it — is compared with the previous round's. ``probe_start`` probes
-      the incoming state too, so the first step may already be the
+      checkpointed through :func:`stats_reset_checkpoint` with
+      ``eager=False`` (under AQE its shuffle-map stages run right there;
+      its final stage runs in the probe), and the ``(count, sum(probe))``
+      aggregate is compared with the previous round's. ``probe_start``
+      probes the incoming state too, so the first step may already be the
       fixpoint.
 
     ``stats["rounds"]`` receives the number of steps run.

@@ -1,5 +1,6 @@
 """The module CLI with two DATA:MAPPING pairs: both sources are extracted,
-unioned and fused once, so a node id both sources emit becomes one row."""
+unioned and fused once, so a node id both sources emit becomes one row,
+whether each source is extracted in one chunk or several."""
 
 import json
 import os
@@ -11,11 +12,27 @@ GENES = (
     "row:\n  map:\n    id_from_column: gene\n    to_subject: gene\n"
     "transformers:\n  - map:\n      column: disease\n      to_object: disease\n"
     "      via_relation: gene_disease\n"
+    "validate:\n  disease:\n    isin: [d1, d2]\n"
 )
 SYMBOLS = (
     "row:\n  map:\n    id_from_column: gene\n    to_subject: gene\n"
     "transformers:\n  - map:\n      column: symbol\n      to_properties: [symbol]\n"
 )
+
+
+def _cli(*args):
+    proc = subprocess.run(
+        [sys.executable, "-m", "ontoweaver_spark", *args, "--master", "local[2]"],
+        capture_output=True, text=True, timeout=600, cwd=ROOT, env={**os.environ},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def _rows(df):
+    return sorted(json.dumps({**r.asDict(), "properties": sorted(
+        (k, list(v)) for k, v in (r["properties"] or {}).items())}, sort_keys=True)
+        for r in df.collect())
 
 
 def test_two_sources_fuse_into_one_graph(spark, tmp_path):
@@ -25,15 +42,9 @@ def test_two_sources_fuse_into_one_graph(spark, tmp_path):
     (tmp_path / "symbols.yaml").write_text(SYMBOLS)
     out = tmp_path / "out"
 
-    proc = subprocess.run(
-        [sys.executable, "-m", "ontoweaver_spark",
-         f"{tmp_path / 'genes.csv'}:{tmp_path / 'genes.yaml'}",
-         f"{tmp_path / 'symbols.csv'}:{tmp_path / 'symbols.yaml'}",
-         "--out", str(out), "--master", "local[2]"],
-        capture_output=True, text=True, timeout=600, cwd=ROOT, env={**os.environ},
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    pairs = (f"{tmp_path / 'genes.csv'}:{tmp_path / 'genes.yaml'}",
+             f"{tmp_path / 'symbols.csv'}:{tmp_path / 'symbols.yaml'}")
+    result = _cli(*pairs, "--out", str(out))
 
     nodes = spark.read.parquet(str(out / "nodes"))
     edges = spark.read.parquet(str(out / "edges"))
@@ -47,3 +58,17 @@ def test_two_sources_fuse_into_one_graph(spark, tmp_path):
     # counts observed on the writes equal a re-read of what was written
     assert (final["nodes"], final["edges"]) == (nodes.count(), edges.count()) == (5, 3)
     assert (result["nodes"], result["edges"]) == (5, 3)
+
+    # two chunks per source, auto salt, report-mode validation: the same
+    # graph, and each source's validation counts reach the manifest
+    chunked = tmp_path / "chunked"
+    result2 = _cli(*pairs, "--out", str(chunked), "--chunks", "2", "--salt", "-1",
+                   "--validate", "report")
+    assert result2["chunks_extracted"] == 4 and (result2["nodes"], result2["edges"]) == (5, 3)
+    for table, df in (("nodes", nodes), ("edges", edges)):
+        assert _rows(spark.read.parquet(str(chunked / table))) == _rows(df)
+    with open(chunked / "_manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest["validation"] == {
+        "0": {"total": 3, "valid": 3, "invalid": 0, "per_rule": {"disease": 0}}}
+    assert sorted(manifest["chunks"]) == ["0", "1", "2", "3"]

@@ -135,3 +135,25 @@ def test_custom_transformer_pandas_udf(spark):
         _check(spark)
     finally:
         unregister("OmniPath")
+
+
+def test_registry_fingerprint_follows_module_source(tmp_path):
+    """Pipeline resume keys on ``registry.fingerprint()``: editing a
+    ``--register`` module changes it, re-importing the same file does not."""
+    from ontoweaver_spark import registry
+
+    mod = tmp_path / "user_tf.py"
+    src = ("from ontoweaver_spark.registry import register\n"
+           "from pyspark.sql import functions as F\n"
+           "register('FpProbe', lambda spec: F.array(F.lit({v!r})))\n")
+    try:
+        mod.write_text(src.format(v="a"))
+        registry.import_from_path(str(mod))
+        first = registry.fingerprint()
+        registry.import_from_path(str(mod))
+        assert registry.fingerprint() == first
+        mod.write_text(src.format(v="b"))
+        registry.import_from_path(str(mod))
+        assert registry.fingerprint() != first
+    finally:
+        unregister("FpProbe")

@@ -157,3 +157,56 @@ def test_pipeline_chunked_post_fusion_flags(spark, tmp_path):
     assert rep3.integrity is None
     nodes3 = spark.read.parquet(out + "/nodes")
     assert nodes3.schema["properties"].dataType.valueType.simpleString().startswith("array")
+
+
+def test_rewritten_input_reextracts(spark, tmp_path):
+    """Resume is keyed on the input files too: an input rewritten in place
+    re-extracts (it used to resume every chunk and fuse the old rows), while
+    an unchanged rerun still resumes."""
+    mapping = {
+        "row": {"map": {"id_from_column": "k", "to_subject": "thing"}},
+        "transformers": [{"map": {"column": "v", "to_object": "value",
+                                  "via_relation": "has_value"}}],
+    }
+    inp, out = str(tmp_path / "in.parquet"), str(tmp_path / "kg")
+    spark.createDataFrame([("a", "1")], "k string, v string").write.parquet(inp)
+    rep = run_pipeline(spark, spark.read.parquet(inp), mapping, out, n_chunks=2)
+    assert (rep.chunks_extracted, rep.fused_nodes) == (2, 2)
+
+    rows = [("a", "1"), ("b", "2"), ("c", "3")]
+    spark.createDataFrame(rows, "k string, v string").write.mode("overwrite").parquet(inp)
+    rep = run_pipeline(spark, spark.read.parquet(inp), mapping, out, n_chunks=2)
+    assert (rep.chunks_extracted, rep.chunks_resumed) == (2, 0)
+    assert (rep.rows_in, rep.fused_nodes, rep.fused_edges) == (3, 6, 3)
+
+    rep = run_pipeline(spark, spark.read.parquet(inp), mapping, out, n_chunks=2)
+    assert (rep.chunks_extracted, rep.chunks_resumed) == (0, 2)
+    assert (rep.rows_in, rep.fused_nodes, rep.fused_edges) == (3, 6, 3)
+
+
+def test_derived_input_reextracts(spark, tmp_path):
+    """Resume is keyed on how the frame was built from its files, not on
+    the files alone: another sample fraction or CSV separator over the same
+    file re-extracts, and the same frame again resumes."""
+    from ontoweaver_spark.loaders import read_table, sub_sample
+
+    mapping = {"row": {"map": {"id_from_column": "k", "to_subject": "thing"}}}
+    inp, out = str(tmp_path / "in.parquet"), str(tmp_path / "kg")
+    spark.createDataFrame([(f"k{i}",) for i in range(200)], "k string").write.parquet(inp)
+    rep = run_pipeline(spark, sub_sample(spark.read.parquet(inp), 10), mapping, out)
+    assert rep.rows_in < 100
+    rep = run_pipeline(spark, sub_sample(spark.read.parquet(inp), 100), mapping, out)
+    assert (rep.chunks_extracted, rep.rows_in, rep.fused_nodes) == (1, 200, 200)
+
+    # one header column, so both separators give the same schema
+    csv = tmp_path / "in.csv"
+    csv.write_text("k\n1,2\n4;5\n")
+
+    def ids(sep):
+        rep = run_pipeline(spark, read_table(spark, str(csv), sep=sep), mapping, out)
+        got = {r.id for r in spark.read.parquet(out + "/nodes").collect()}
+        return rep.chunks_resumed, got
+
+    assert ids(",") == (0, {"1", "4;5"})
+    assert ids(";") == (0, {"1,2", "4"})
+    assert ids(";") == (1, {"1,2", "4"})

@@ -77,19 +77,21 @@ def test_shapes_file_unknown_key_fails_loudly(tmp_path):
         load_shapes(str(bad))
 
 
-def test_shacl_with_chunks_is_rejected(tmp_path, capsys):
-    """The chunked path has no SHACL gate: rather than exit 0 without ever
-    checking the shapes, the combination fails at argument parsing, before
-    a Spark session starts."""
-    import pytest
-
-    from ontoweaver_spark.__main__ import main
-
+def test_shacl_with_chunks_gates_the_run(tmp_path):
+    """--chunks N runs the same one pipeline, SHACL gate included: the
+    violation fails the run and lands in OUT/shacl_violations."""
+    data = tmp_path / "data.csv"
+    data.write_text("variant_id,patient\n0,A\n1,B\n2,\n3,C\n")
+    mapping = tmp_path / "mapping.yaml"
+    mapping.write_text(MAPPING)
     shapes = tmp_path / "shapes.yaml"
     shapes.write_text(SHAPES_VIOLATED)
-    with pytest.raises(SystemExit) as exc:
-        main([f"{tmp_path / 'data.csv'}:{tmp_path / 'mapping.yaml'}",
-              "--out", str(tmp_path / "out"), "--chunks", "2", "--shacl", str(shapes)])
-    assert exc.value.code == 2
-    assert "--shacl cannot be combined with --chunks" in capsys.readouterr().err
-    assert not (tmp_path / "out").exists()
+    out = tmp_path / "out"
+
+    proc = _run([f"{data}:{mapping}", "--out", str(out), "--affix", "suffix",
+                 "--master", "local[2]", "--chunks", "2", "--shacl", str(shapes)])
+    assert proc.returncode == 3, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["shacl_violations"] == 1 and result["chunks_extracted"] == 2
+    assert "SHACL min_count" in proc.stderr
+    assert (out / "shacl_violations").exists()

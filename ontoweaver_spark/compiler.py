@@ -3,10 +3,16 @@
 Replaces the reference's per-row interpretation loop
 (``IterativeAdapter.run``, /root/reference/src/ontoweaver/iterative.py:637-828)
 with ONE declarative projection: each input row yields an array of candidate
-structs (value, branch-resolved labels) built entirely from Column
-expressions and higher-order functions, then nodes and edges are exploded
+structs (value, branch-resolved labels), then nodes and edges are exploded
 out. The extraction is a row-local flatMap — zero shuffles; the only shuffle
 in the whole engine is the fusion stage (:mod:`ontoweaver_spark.fusion`).
+
+Only the per-operator values (:func:`transformers.compile_values`, user
+candidates) are Columns; they are projected once into engine-named columns.
+Everything above them — labels, candidates, properties, node/edge assembly —
+is SQL text over those names and quoted literals (:func:`ids.sql_str`),
+handed to the JVM in a few ``selectExpr`` calls: a compile costs hundreds of
+py4j round trips, not thousands, and no user column name is ever parsed.
 
 Semantics parity notes (vs /root/reference/src/ontoweaver/iterative.py):
 - subject: first valid value of the subject transformer; invalid subject
@@ -34,15 +40,10 @@ from typing import Optional, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ids import affix_id
-from .nulls import is_not_null
+from .ids import affix_sql, sql_str
+from .nulls import is_not_null_sql
 from .spec import MappingSpec, TransformerSpec, load_mapping
-from .transformers import (
-    ROW_ID_COL,
-    CompiledCandidates,
-    CompiledValues,
-    compile_values,
-)
+from .transformers import ROW_ID_COL, CompiledCandidates, compile_values
 
 CAND_TYPE = (
     "array<struct<value:string,label:string,edge:string,final:string,"
@@ -93,49 +94,48 @@ def with_row_index(df: DataFrame, col_name: str = ROW_ID_COL) -> DataFrame:
     )
 
 
-def _null_str() -> Column:
-    return F.lit(None).cast("string")
+NULL_STR = "CAST(NULL AS STRING)"
+EMPTY_PROPS = "map_from_entries(CAST(array() AS array<struct<key:string,value:array<string>>>))"
+_TYPE_ATTR = {"node": "node_type", "edge": "edge_type", "final": "final_type", "rev": "reverse_edge"}
 
 
-def _branch_field(t: TransformerSpec, value: Column, field: str) -> Column:
-    """Branch-resolved label for one field of the candidate struct.
+def _lit(v: Optional[str]) -> str:
+    return NULL_STR if v is None else sql_str(v)
+
+
+def _valid(values: str) -> str:
+    """The array ``values`` with the null-skip contract applied."""
+    return f"filter({values}, x -> {is_not_null_sql('x')})"
+
+
+def _branch_field(t: TransformerSpec, value: str, field: str, match_src: str) -> str:
+    """Branch-resolved label (SQL) for one field of the candidate struct.
 
     ``match`` is an ordered ``re.search`` cascade — first hit wins
     (/root/reference/src/ontoweaver/make_labels.py:106-136); the predicate
     source is the extracted value, or another column under
-    ``match_type_from_column`` (make_labels.py:151-162).
+    ``match_type_from_column`` (make_labels.py:151-162), projected as
+    ``match_src``.
     """
-    static = {
-        "node": t.node_type,
-        "edge": t.edge_type,
-        "final": t.final_type,
-        "rev": t.reverse_edge,
-    }[field]
-
+    static = getattr(t, _TYPE_ATTR[field])
     if not t.match:
-        return F.lit(static) if static is not None else _null_str()
-
-    src = F.col(t.match_column) if t.match_column else value
-    expr = None
-    for case in t.match:
-        v = {
-            "node": case.node_type,
-            "edge": case.edge_type,
-            "final": case.final_type,
-            "rev": case.reverse_edge,
-        }[field]
-        branch_val = F.lit(v) if v is not None else _null_str()
-        cond = src.rlike(case.pattern)
-        expr = F.when(cond, branch_val) if expr is None else expr.when(cond, branch_val)
-    expr = expr.otherwise(_null_str())
-
+        return _lit(static)
     if field == "final" and t.final_type:
         # transformer-wide final_type overrides per-branch final_type
         # (/root/reference/src/ontoweaver/mapping.py:278-300; fixture F6)
-        return F.lit(t.final_type)
-    if static is not None:
-        return F.coalesce(expr, F.lit(static))
-    return expr
+        return sql_str(t.final_type)
+    src = match_src if t.match_column else value
+    cases = " ".join(
+        f"WHEN {src} RLIKE {sql_str(case.pattern)} THEN {_lit(getattr(case, _TYPE_ATTR[field]))}"
+        for case in t.match
+    )
+    expr = f"CASE {cases} ELSE {NULL_STR} END"
+    return f"coalesce({expr}, {sql_str(static)})" if static is not None else expr
+
+
+def _cand_struct(value: str, label: str, edge: str, final: str, rev: str, fs: str, i: int) -> str:
+    return (f"named_struct('value', {value}, 'label', {label}, 'edge', {edge}, "
+            f"'final', {final}, 'rev', {rev}, 'fs', {fs}, 'tidx', {i})")
 
 
 @dataclass
@@ -149,39 +149,29 @@ class ExtractResult:
     pruning spares a node-only consumer the edge assembly. ``elements`` is
     nodes and edges from ONE explode (id, src, dst, label, properties,
     kind "node" | "edge"; src/dst NULL on nodes), for consumers that need
-    both, so the candidate assembly runs once per row, not twice."""
+    both, so the candidate assembly runs once per row, not twice. Each is
+    one ``selectExpr`` over the SQL-assembled arrays."""
 
     assembled: DataFrame  # one row per input row: _nodes, _edges arrays
     validation_report: object = None  # ValidationReport when validate_mode="report"
 
     @cached_property
     def nodes(self) -> DataFrame:
-        return self.assembled.select(F.explode("_nodes").alias("n")).select("n.*")
+        return self.assembled.selectExpr("inline(_nodes)")
 
     @cached_property
     def edges(self) -> DataFrame:
-        return self.assembled.select(F.explode("_edges").alias("e")).select("e.*")
+        return self.assembled.selectExpr("inline(_edges)")
 
     @cached_property
     def elements(self) -> DataFrame:
-        return self.assembled.select(F.explode(F.concat(
-            F.transform("_nodes", lambda n: F.struct(
-                n["id"].alias("id"), _null_str().alias("src"), _null_str().alias("dst"),
-                n["label"].alias("label"), n["properties"].alias("properties"),
-                F.lit("node").alias("kind"),
-            )),
-            F.transform("_edges", lambda e: F.struct(
-                e["id"].alias("id"), e["src"].alias("src"), e["dst"].alias("dst"),
-                e["label"].alias("label"), e["properties"].alias("properties"),
-                F.lit("edge").alias("kind"),
-            )),
-        )).alias("x")).select("x.*")
-
-
-def _empty_props() -> Column:
-    return F.map_from_entries(
-        F.array().cast(f"array<struct<key:string,value:array<string>>>")
-    )
+        return self.assembled.selectExpr(
+            "inline(concat(transform(_nodes, n -> named_struct('id', n.id, "
+            f"'src', {NULL_STR}, 'dst', {NULL_STR}, 'label', n.label, "
+            "'properties', n.properties, 'kind', 'node')), "
+            "transform(_edges, e -> named_struct('id', e.id, 'src', e.src, 'dst', e.dst, "
+            "'label', e.label, 'properties', e.properties, 'kind', 'edge'))))"
+        )
 
 
 def compile_mapping(
@@ -257,108 +247,88 @@ def compile_mapping(
         for t in [spec.subject, *spec.transformers, *spec.properties]
     )
     used = df.columns if opaque_user else [c for c in spec.all_columns() if c in df.columns]
-    prepared = df.select(*[F.col(c).cast("string").alias(c) for c in used]) if used else df
+    # (toDF names the casts: one JVM call instead of one alias per column)
+    as_str = [F.col(c).cast("string") for c in used]
+    prepared = df.select(*as_str).toDF(*used) if used else df
     if spec.uses_row_index():
-        prepared = with_row_index(df).select(
-            *[F.col(c).cast("string").alias(c) for c in used], F.col(ROW_ID_COL)
-        )
+        prepared = with_row_index(df).select(*as_str, ROW_ID_COL).toDF(*used, ROW_ID_COL)
 
+    # Operator values (and user candidates) stay Columns; they are projected
+    # once into engine-named columns, so the SQL below never names a user
+    # column: _s subject, _t<i> transformer, _p<j> property, _m<tag> the
+    # match_type_from_column source.
+    cols: dict[str, Column] = {}
     prestages = []
 
+    def project(t: TransformerSpec, tag: str):
+        cv = compile_values(t, tag=tag)
+        prestages.extend(cv.prestages)
+        cols[f"_{tag}"] = cv.candidates if isinstance(cv, CompiledCandidates) else cv.values
+        if t.match_column:
+            cols[f"_m{tag}"] = F.col(t.match_column)
+        return cv
+
     # --- subject -----------------------------------------------------------
-    sub_cv = compile_values(spec.subject, tag="s")
-    prestages += sub_cv.prestages
-    sub_vals = F.filter(sub_cv.values, is_not_null)
-    sval = F.get(sub_vals, 0)
-    sub_label = _branch_field(spec.subject, sval, "node")
-    sub_final = _branch_field(spec.subject, sval, "final")
-    sub_eff = F.coalesce(sub_final, sub_label)
+    project(spec.subject, "s")
+    sval = f"get({_valid('_s')}, 0)"
+    sub_label = _branch_field(spec.subject, sval, "node", "_ms")
+    sub_eff = f"coalesce({_branch_field(spec.subject, sval, 'final', '_ms')}, {sub_label})"
 
     # --- object candidates --------------------------------------------------
-    def _make_candidate_fn(t: TransformerSpec, i: int):
-        # NB: pyspark HOF callbacks must take exactly one positional arg
-        # (two would be read as (value, index)), hence the closure factory.
-        def mk(v):
-            return F.struct(
-                v.alias("value"),
-                _branch_field(t, v, "node").alias("label"),
-                _branch_field(t, v, "edge").alias("edge"),
-                _branch_field(t, v, "final").alias("final"),
-                _branch_field(t, v, "rev").alias("rev"),
-                (F.lit(t.from_subject) if t.from_subject else _null_str()).alias("fs"),
-                F.lit(i).alias("tidx"),
-            )
-        return mk
-
     cand_arrays = []
     for i, t in enumerate(spec.transformers):
-        cv = compile_values(t, tag=f"t{i}")
-        prestages += cv.prestages
-        if isinstance(cv, CompiledCandidates):
+        fs = _lit(t.from_subject)
+        if isinstance(project(t, f"t{i}"), CompiledCandidates):
             # user transformer did its own branching; attach fs/tidx
-            fs_lit = F.lit(t.from_subject) if t.from_subject else _null_str()
-
-            def retag(c, fs_lit=fs_lit, i=i):
-                return F.struct(
-                    c["value"].alias("value"), c["label"].alias("label"),
-                    c["edge"].alias("edge"), c["final"].alias("final"),
-                    c["rev"].alias("rev"), fs_lit.alias("fs"), F.lit(i).alias("tidx"),
-                )
-
-            cand = F.filter(
-                F.transform(cv.candidates, lambda c: retag(c)),
-                lambda c: c["label"].isNotNull() & is_not_null(c["value"]),
+            retag = _cand_struct("c.value", "c.label", "c.edge", "c.final", "c.rev", fs, i)
+            cand_arrays.append(
+                f"filter(transform(_t{i}, c -> {retag}), "
+                f"c -> c.label IS NOT NULL AND {is_not_null_sql('c.value')})"
             )
-            cand_arrays.append(cand)
             continue
-        vals = F.filter(cv.values, is_not_null)
-        cand = F.filter(
-            F.transform(vals, _make_candidate_fn(t, i)),
-            lambda c: c["label"].isNotNull(),
+        mk = _cand_struct(
+            "v", *[_branch_field(t, "v", f, f"_mt{i}") for f in _TYPE_ATTR], fs, i
         )
-        cand_arrays.append(cand)
-
+        cand_arrays.append(
+            f"filter(transform({_valid(f'_t{i}')}, v -> {mk}), c -> c.label IS NOT NULL)"
+        )
     candidates = (
-        F.concat(*cand_arrays) if cand_arrays else F.array().cast(CAND_TYPE)
+        f"concat({', '.join(cand_arrays)})" if cand_arrays else f"CAST(array() AS {CAND_TYPE})"
     )
 
     # --- properties & metadata ----------------------------------------------
-    # type name -> {prop name -> array<string> values expr}
-    props_by_type: dict[str, dict[str, Column]] = {}
+    # type name -> {prop name -> array<string> values (SQL)}
+    props_by_type: dict[str, dict[str, str]] = {}
     for j, p in enumerate(spec.properties):
-        cv = compile_values(p, tag=f"p{j}")
-        prestages += cv.prestages
-        vals = F.filter(cv.values, is_not_null)
+        project(p, f"p{j}")
         for type_name in p.prop_for:
             bucket = props_by_type.setdefault(type_name, {})
             for name in p.prop_names:
-                bucket[name] = vals
+                bucket[name] = _valid(f"_p{j}")
 
     if spec.metadata or spec.source_columns_key:
         node_types = set(spec.node_type_names())
         for type_name in spec.mapped_types():
             bucket = props_by_type.setdefault(type_name, {})
             for k, v in spec.metadata.items():
-                bucket[k] = F.array(F.lit(v))
+                bucket[k] = f"array({sql_str(v)})"
             # source-column names attach to node types only
             if spec.source_columns_key and type_name in node_types:
-                cols = spec.columns_for_type(type_name)
-                if cols:
-                    bucket[spec.source_columns_key] = F.array(F.lit(", ".join(cols)))
+                cols_of = spec.columns_for_type(type_name)
+                if cols_of:
+                    bucket[spec.source_columns_key] = f"array({sql_str(', '.join(cols_of))})"
 
-    if props_by_type:
-        entries = []
-        for type_name in sorted(props_by_type):
-            m = F.map_from_entries(F.array(*[
-                F.struct(F.lit(n).alias("key"), vals.alias("value"))
-                for n, vals in props_by_type[type_name].items()
-            ]))
-            entries += [F.lit(type_name), m]
-        props_map_expr = F.create_map(*entries)
-    else:
-        props_map_expr = F.map_from_entries(
-            F.array().cast(f"array<struct<key:string,value:{PROPS_TYPE}>>")
-        )
+    def type_props(props: dict[str, str]) -> str:
+        entries = [f"named_struct('key', {sql_str(n)}, 'value', {v})" for n, v in props.items()]
+        return f"map_from_entries(array({', '.join(entries)}))"
+
+    props_map = (
+        "map({})".format(", ".join(
+            f"{sql_str(tn)}, {type_props(props_by_type[tn])}" for tn in sorted(props_by_type)
+        ))
+        if props_by_type
+        else f"map_from_entries(CAST(array() AS array<struct<key:string,value:{PROPS_TYPE}>>))"
+    )
 
     # --- stage 1: extract row-local intermediates (no shuffle) ---------------
     for stage in prestages:
@@ -375,99 +345,60 @@ def compile_mapping(
     # this projection with full expression substitution (measured 42 copies
     # of the extraction regexes in one pushed Filter). Row validity is
     # handled in stage 2 by emitting empty node/edge arrays instead.
-    stage1 = prepared.select(
-        sval.alias("_sval"),
-        sub_label.alias("_slabel"),
-        sub_eff.alias("_seff"),
-        candidates.alias("_cands"),
-        props_map_expr.alias("_props"),
-        F.rand(42).alias("_ow_barrier"),
+    stage1 = prepared.select(*cols.values()).toDF(*cols).selectExpr(
+        f"{sval} AS _sval", f"{sub_label} AS _slabel", f"{sub_eff} AS _seff",
+        f"{candidates} AS _cands", f"{props_map} AS _props", "rand(42) AS _ow_barrier",
     )
-
-    sval = F.col("_sval")
-    sub_label = F.col("_slabel")
-    sub_eff = F.col("_seff")
-    candidates = F.col("_cands")
-
-    def props_for(label_col: Column) -> Column:
-        return F.coalesce(F.try_element_at(F.col("_props"), label_col), _empty_props())
 
     # --- stage 2: assemble nodes & edges --------------------------------------
-    def _affix(name: Column, type_: Column) -> Column:
-        return affix_id(name, type_, affix=affix, sep=type_affix_sep)
+    def props_for(label: str) -> str:
+        return f"coalesce(try_element_at(_props, {label}), {EMPTY_PROPS})"
 
-    sub_id = _affix(sval, sub_eff)
+    def cand_id(c: str) -> str:
+        return affix_sql(f"{c}.value", f"coalesce({c}.final, {c}.label)",
+                         affix=affix, sep=type_affix_sep)
 
-    def cand_eff(c):
-        return F.coalesce(c["final"], c["label"])
-
-    def cand_id(c):
-        return _affix(c["value"], cand_eff(c))
-
-    subject_node = F.struct(
-        sub_id.alias("id"), sub_eff.alias("label"), props_for(sub_label).alias("properties")
+    sub_id = affix_sql("_sval", "_seff", affix=affix, sep=type_affix_sep)
+    all_nodes = (
+        f"concat(array(named_struct('id', {sub_id}, 'label', _seff, "
+        f"'properties', {props_for('_slabel')})), transform(_cands, c -> named_struct("
+        f"'id', {cand_id('c')}, 'label', coalesce(c.final, c.label), "
+        f"'properties', {props_for('c.label')})))"
     )
-    target_nodes = F.transform(
-        candidates,
-        lambda c: F.struct(
-            cand_id(c).alias("id"), cand_eff(c).alias("label"),
-            props_for(c["label"]).alias("properties"),
-        ),
+
+    # edge sources per candidate (from_subject cascade): the row subject,
+    # else every same-row candidate whose declared label matches, else the
+    # subject when its declared label matches, else none
+    matches = "filter(_cands, x -> x.label = c.fs)"
+    srcs = (
+        f"CASE WHEN c.fs IS NULL THEN array({sub_id}) "
+        f"WHEN size({matches}) > 0 THEN transform({matches}, x -> {cand_id('x')}) "
+        f"WHEN _slabel = c.fs THEN array({sub_id}) ELSE CAST(array() AS array<string>) END"
     )
-    all_nodes = F.concat(F.array(subject_node), target_nodes)
 
-    # edge source resolution (from_subject cascade)
-    def _label_matches(c):
-        def pred(x):
-            return x["label"] == c["fs"]
-        return pred
+    def edge(src: str, dst: str, label: str) -> str:
+        return (f"named_struct('id', format_string('(%s)--[%s]->(%s)', {src}, {label}, {dst}), "
+                f"'src', {src}, 'dst', {dst}, 'label', {label}, 'properties', {props_for(label)})")
 
-    def edge_sources(c) -> Column:
-        """array of source IDs for this candidate's edge(s)."""
-        default = F.array(sub_id)
-        matches = F.filter(candidates, _label_matches(c))
-        alt = F.when(F.size(matches) > 0, F.transform(matches, cand_id)) \
-               .when(sub_label == c["fs"], F.array(sub_id)) \
-               .otherwise(F.array().cast("array<string>"))
-        return F.when(c["fs"].isNull(), default).otherwise(alt)
-
-    def mk_edges(c) -> Column:
-        """array of edge structs (forward + optional reverse) per source."""
-        dst = cand_id(c)
-        srcs = edge_sources(c)
-
-        def fwd(src):
-            return F.struct(
-                F.format_string("(%s)--[%s]->(%s)", src, c["edge"], dst).alias("id"),
-                src.alias("src"), dst.alias("dst"), c["edge"].alias("label"),
-                props_for(c["edge"]).alias("properties"),
-            )
-
-        def rev(src):
-            return F.struct(
-                F.format_string("(%s)--[%s]->(%s)", dst, c["rev"], src).alias("id"),
-                dst.alias("src"), src.alias("dst"), c["rev"].alias("label"),
-                props_for(c["rev"]).alias("properties"),
-            )
-
-        # typed empty literals, not slices of the built arrays: a slice
-        # would assemble every reverse edge (ids, property lookups) only
-        # to discard it whenever ``rev`` is NULL
-        none = F.array().cast(EDGE_ARRAY_TYPE)
-        forward = F.when(c["edge"].isNotNull(), F.transform(srcs, fwd)).otherwise(none)
-        reverse = F.when(
-            c["edge"].isNotNull() & c["rev"].isNotNull(), F.transform(srcs, rev)
-        ).otherwise(none)
-        return F.concat(forward, reverse)
-
-    all_edges = F.flatten(F.transform(candidates, mk_edges))
+    # typed empty literals, not slices of the built arrays: a slice would
+    # assemble every reverse edge (ids, property lookups) only to discard it
+    # whenever ``rev`` is NULL
+    none = f"CAST(array() AS {EDGE_ARRAY_TYPE})"
+    dst = cand_id("c")
+    all_edges = (
+        f"flatten(transform(_cands, c -> concat("
+        f"CASE WHEN c.edge IS NOT NULL THEN transform({srcs}, s -> {edge('s', dst, 'c.edge')}) "
+        f"ELSE {none} END, "
+        f"CASE WHEN c.edge IS NOT NULL AND c.rev IS NOT NULL "
+        f"THEN transform({srcs}, s -> {edge(dst, 's', 'c.rev')}) ELSE {none} END)))"
+    )
 
     # invalid subject -> whole row skipped (iterative.py:255-330), expressed
     # as empty arrays so no Filter node exists for Catalyst to push down
-    row_ok = sval.isNotNull() & sub_label.isNotNull()
-    all_nodes = F.when(row_ok, all_nodes).otherwise(F.array().cast(NODE_ARRAY_TYPE))
-    all_edges = F.when(row_ok, all_edges).otherwise(F.array().cast(EDGE_ARRAY_TYPE))
-
-    assembled = stage1.select(all_nodes.alias("_nodes"), all_edges.alias("_edges"))
+    row_ok = "_sval IS NOT NULL AND _slabel IS NOT NULL"
+    assembled = stage1.selectExpr(
+        f"CASE WHEN {row_ok} THEN {all_nodes} ELSE CAST(array() AS {NODE_ARRAY_TYPE}) END AS _nodes",
+        f"CASE WHEN {row_ok} THEN {all_edges} ELSE {none} END AS _edges",
+    )
 
     return ExtractResult(assembled=assembled, validation_report=validation_report)

@@ -307,7 +307,7 @@ def connected_components(
     emitted — callers union them in if needed. ``stats`` (optional dict)
     receives ``{"rounds": n}`` for round-count assertions.
     """
-    raw = pairs.selectExpr(f"{a_col} AS u", f"{b_col} AS v")
+    raw = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     verts = (
         raw.selectExpr("u AS vertex").unionAll(raw.selectExpr("v AS vertex"))
         .distinct()

@@ -7,6 +7,9 @@ type affix — ``prefix`` -> ``{type}{sep}{name}``, ``suffix`` ->
 (/root/reference/src/ontoweaver/__init__.py:309). The type used in the affix
 is the element's *final* type when a ``final_type`` override is declared,
 else its declared target type (/root/reference/src/ontoweaver/iterative.py:281-292).
+
+The compiler emits its projection as SQL text, hence :func:`affix_sql` and
+:func:`sql_str`, the one quoting helper every mapping literal goes through.
 """
 
 from __future__ import annotations
@@ -25,6 +28,26 @@ def affix_id(name: Column, type_: Column, affix: str = "none", sep: str = ":") -
         return F.concat(type_, F.lit(sep), name)
     if affix == "suffix":
         return F.concat(name, F.lit(sep), type_)
+    return name
+
+
+def sql_str(s) -> str:
+    """``s`` as a Spark SQL string literal. Escapes the backslash and the
+    quote, and writes ``$`` as ``\\u0024``: ``selectExpr`` substitutes
+    ``${...}`` variables even inside string literals."""
+    s = str(s).replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{s}'"
+
+
+def affix_sql(name: str, type_: str, affix: str = "none", sep: str = ":") -> str:
+    """SQL rendering of :func:`affix_id` over the SQL expressions
+    ``name`` and ``type_``."""
+    if affix not in AFFIXES:
+        raise ValueError(f"unknown affix {affix!r}, expected one of {AFFIXES}")
+    if affix == "prefix":
+        return f"concat({type_}, {sql_str(sep)}, {name})"
+    if affix == "suffix":
+        return f"concat({name}, {sql_str(sep)}, {type_})"
     return name
 
 

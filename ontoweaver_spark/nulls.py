@@ -6,7 +6,8 @@ is SQL NULL, the empty string, the string ``"nan"`` case-insensitively, or
 the literal string ``"None"``. All cells in the engine's domain are strings
 (the reference loads every table with ``dtype=str``,
 /root/reference/src/ontoweaver/loader.py:173-216), so one string predicate
-covers every case.
+covers every case. The compiler's projection is SQL text, so the predicate
+has a SQL rendering too; both must agree on every cell (tested).
 """
 
 from __future__ import annotations
@@ -23,3 +24,8 @@ def is_not_null(col: Column) -> Column:
         & (F.lower(col) != F.lit("nan"))
         & (col != F.lit("None"))
     )
+
+
+def is_not_null_sql(x: str) -> str:
+    """SQL rendering of :func:`is_not_null` over the SQL expression ``x``."""
+    return f"({x} IS NOT NULL AND {x} != '' AND lower({x}) != 'nan' AND {x} != 'None')"

@@ -316,3 +316,15 @@ def test_connected_components_chain_logarithmic(spark):
     assert {r["component"] for r in rows} == {0}  # one component, min id
     assert len(rows) == 100
     assert stats["rounds"] <= 10  # measured 7-8; log2(99) ~ 6.6
+
+
+def test_connected_components_quoted_column_names(spark):
+    """Pair columns are column names, not SQL: ``doc-a`` must not parse as
+    ``doc - a``."""
+    from ontoweaver_spark.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "`doc-a` bigint, `doc-b` bigint")
+    cc = connected_components(pairs, a_col="doc-a", b_col="doc-b")
+    assert sorted((r["vertex"], r["component"]) for r in cc.collect()) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    ]

@@ -44,6 +44,7 @@ from .ids import affix_sql, sql_str
 from .nulls import is_not_null_sql
 from .spec import MappingSpec, TransformerSpec, load_mapping
 from .transformers import ROW_ID_COL, CompiledCandidates, compile_values
+from .validate import apply_rules
 
 CAND_TYPE = (
     "array<struct<value:string,label:string,edge:string,final:string,"
@@ -186,55 +187,19 @@ def compile_mapping(
     Returns raw (pre-fusion) nodes/edges DataFrames; run
     :func:`ontoweaver_spark.fusion.reconciliate` to deduplicate and merge.
 
-    ``validate_mode`` controls what a mapping-level ``validate:`` section
-    does with invalid rows (the reference's InputValidator raises by
-    default — reference validate.py ``__call__`` with raise_errors=True —
-    so silent dropping must be an explicit opt-in):
-
-    - ``"raise"`` (default): the job fails on the FIRST invalid row, naming
-      the violated rule columns. Implemented as a runtime ``raise_error``
-      guard inside the scan filter — fail-loud costs zero extra jobs/scans
-      at any scale.
-    - ``"filter"``: silently drop invalid rows (predicates push down to the
-      parquet scan).
-    - ``"report"``: eagerly count violations (one aggregation pass), drop
-      invalid rows, and attach the :class:`ValidationReport` to the result.
+    ``validate_mode`` (raise | filter | report) is what a mapping-level
+    ``validate:`` section does with invalid rows: :func:`validate.apply_rules`,
+    applied before the string-cast projection so simple predicates push down
+    to the parquet scan. The default ``"raise"`` matches the reference's
+    InputValidator; ``"report"`` counts eagerly and attaches the
+    :class:`~ontoweaver_spark.validate.ValidationReport` to the result.
     """
     spec = mapping if isinstance(mapping, MappingSpec) else load_mapping(mapping)
 
     missing = [c for c in spec.all_columns() if c != ROW_ID_COL and c not in df.columns]
     if missing:
         raise ValueError(f"mapping references missing columns: {missing}")
-
-    validation_report = None
-    if spec.input_rules:
-        # mapping-level `validate:` section — applied BEFORE the string-cast
-        # projection so simple predicates (isin / in_range on native types)
-        # push down to the parquet scan
-        from .validate import compile_rule, validate_input, validity
-
-        if validate_mode == "filter":
-            df = df.where(validity(spec.input_rules))
-        elif validate_mode == "report":
-            df, validation_report = validate_input(df, spec.input_rules)
-        elif validate_mode == "raise":
-            fails = F.array_compact(F.array(*[
-                F.when(~compile_rule(c, spec.input_rules[c]), F.lit(c))
-                for c in sorted(spec.input_rules)
-            ]))
-            df = df.where(
-                F.when(validity(spec.input_rules), F.lit(True)).otherwise(
-                    F.raise_error(F.concat(
-                        F.lit("input validation failed (violated rule column(s): "),
-                        F.concat_ws(",", fails),
-                        F.lit("); use validate_mode='filter'/'report' to drop instead"),
-                    )).cast("boolean")
-                )
-            )
-        else:
-            raise ValueError(
-                f"validate_mode must be raise|filter|report, got {validate_mode!r}"
-            )
+    df, validation_report = apply_rules(df, spec.input_rules, validate_mode)
 
     # Canonical string cell domain (reference loads everything dtype=str,
     # loader.py:173-216) + column pruning: keep only referenced columns.

@@ -9,9 +9,11 @@ one driver of a KG job: the ``ontoweave`` CLI runs every invocation through
 counts are taken with ``Observation``s on the writes that run anyway, never
 by re-scanning.
 
-- **Phase 0 (stage input, multi-chunk runs only).** The input is written
-  once to ``staging_input``, partitioned by chunk id (hash of a stable key),
-  so each chunk later reads only its own partition directory.
+- **Phase 0 (validate; stage input in multi-chunk runs).** Each source's
+  rules are applied once (:func:`validate.apply_rules`); its chunks compile
+  without them. A multi-chunk run writes the rows that pass once to
+  ``staging_input``, partitioned by chunk id (hash of a stable key), so each
+  chunk reads only its own directory and raise mode fails before any chunk.
 - **Phase 1 (extract)** is a row-local flatMap, embarrassingly parallel.
   Each chunk's subject nodes, object nodes and edges come out of a single
   explode (``ExtractResult.elements``) and are written once, partitioned by
@@ -53,7 +55,7 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 from typing import Optional, Union
 from urllib.parse import unquote, urlparse
 
@@ -66,6 +68,8 @@ from .compiler import EDGE_SCHEMA, NODE_SCHEMA, compile_mapping
 from .fusion import format_for_export, has_property_conflict, reconciliate
 from .ids import natural_sort_key
 from .spec import MappingSpec, load_mapping
+from .validate import (ValidationReport, apply_rules, check_mode, graph_integrity,
+                       graph_props_frame, load_shapes, shacl_validate)
 
 #: staging layout tag recorded in ``extract_conf``: an out_dir staged under
 #: another layout (the former ``chunk-<c>/{nodes,edges}``) re-extracts
@@ -324,9 +328,10 @@ def run_pipeline(
     chunks (e.g. ``url``). With ``n_chunks=1`` staging is a single snapshot.
 
     ``validate_mode``: what a mapping-level ``validate:`` section does with
-    invalid rows — the pipeline default is ``"report"`` (drop + surface the
-    per-rule violation counts in the manifest); ``"raise"`` matches the
-    reference's fail-loud InputValidator; ``"filter"`` drops silently.
+    invalid rows (:func:`validate.apply_rules`) — the pipeline default is
+    ``"report"`` (drop + surface the per-rule violation counts in the
+    manifest); ``"raise"`` matches the reference's fail-loud InputValidator;
+    ``"filter"`` drops silently. An unknown mode fails before any Spark work.
 
     ``property_mergers``: optional {property name -> mergers.Merger} applied
     to the fused nodes before writing (``mergers.render_properties``); any
@@ -334,10 +339,9 @@ def run_pipeline(
     as ``property_conflicts`` instead of merging silently.
     """
     t0 = time.time()
+    check_mode(validate_mode)
     shapes = None
     if shacl:
-        from .validate import load_shapes
-
         shapes = load_shapes(shacl)  # a bad shapes file fails before any write
     pairs = (list(zip(input_df, mapping, strict=True))
              if isinstance(input_df, (list, tuple)) else [(input_df, mapping)])
@@ -356,7 +360,10 @@ def run_pipeline(
         "validate_mode": validate_mode, "staging": STAGING_LAYOUT,
     }
     extract_conf = {**chunk_conf, "inputs": [_input_fingerprint(t) for t in tables],
-                    "transformers": registry.fingerprint()}
+                    "transformers": registry.fingerprint(),
+                    # staging_input holds only rows that passed the rules (an
+                    # out_dir that staged raw rows re-stages)
+                    "staging_input": "validated"}
     if manifest.get("extract_conf") != extract_conf:
         manifest = {"chunks": {}, "final": None}
     manifest["extract_conf"] = extract_conf
@@ -370,8 +377,6 @@ def run_pipeline(
         # call only after the action carrying the observation has succeeded
         nonlocal validation
         if validation is not None:
-            from .validate import ValidationReport
-
             block = asdict(ValidationReport.from_row(validation.get, specs[s].input_rules))
             manifest["validation"] = (
                 {**manifest.get("validation", {}), str(s): block} if many else block)
@@ -387,22 +392,13 @@ def run_pipeline(
             continue
         staged_sources = manifest.get("input_staged", [])
 
-        # ---- input validation: counted on the first action that scans it
-        if spec.input_rules and validate_mode == "report":
-            # staged input was written from already-validated rows: a
-            # crash-resume must not re-scan the raw input just to recompute
-            # counts the manifest already holds
-            if s not in staged_sources:
-                from .validate import validation_aggs, validity
-
-                validation = Observation()
-                table = table.observe(
-                    validation, *validation_aggs(spec.input_rules)
-                ).where(validity(spec.input_rules))
-            # rules already applied; chunks compile with a plain filter (no-op)
-            chunk_validate_mode = "filter"
-        else:
-            chunk_validate_mode = validate_mode
+        # the rules run once per source, on the first action that scans its
+        # input (the staging_input write, else the extraction write); a resume
+        # reads staged rows that already passed them and keeps their counts
+        if n_chunks == 1 or s not in staged_sources:
+            table, validation = apply_rules(table, spec.input_rules, validate_mode,
+                                            observe=True)
+        spec = replace(spec, input_rules={})
 
         # Multi-chunk runs stage the input ONCE, partitioned by chunk id (one
         # full input scan); each chunk then reads only its own directory.
@@ -428,10 +424,7 @@ def run_pipeline(
                 part = table
             part, rows_obs = _observe_partitions(part)
 
-            res = compile_mapping(
-                part, spec, affix=affix, type_affix_sep=type_affix_sep,
-                validate_mode=chunk_validate_mode,
-            )
+            res = compile_mapping(part, spec, affix=affix, type_affix_sep=type_affix_sep)
             kinds = Observation()
             kind = F.col("kind")
             (
@@ -627,14 +620,10 @@ def _publish(
 
         neo4j_export.write_neo4j_import(fnodes, fedges, neo4j_out)
     if validate_output:
-        from .validate import graph_integrity
-
         final["integrity"] = graph_integrity(fnodes, fedges)
     if shapes is not None:
         # publish gate: per-node structural contracts (cardinalities and
         # classes need raw ids and the props map)
-        from .validate import graph_props_frame, shacl_validate
-
         viol = shacl_validate(
             fnodes.select("id", "label"), fedges, shapes, props=graph_props_frame(fnodes),
         ).localCheckpoint()

@@ -447,30 +447,13 @@ def parse_mapping(config: dict) -> MappingSpec:
             else:
                 metadata[str(k)] = str(v)
 
-    input_rules = config.get("validate") or {}
-    if input_rules and not (
-        isinstance(input_rules, dict)
-        and all(isinstance(v, dict) for v in input_rules.values())
-    ):
-        raise MappingError("`validate` must map column names to rule dicts")
-    if input_rules:
-        # fail at parse time on misspelled rules / pasted pandera schemas
-        # (a top-level `columns:` key satisfies the dict-of-dicts shape but
-        # would otherwise silently validate nothing)
-        from .validate import KNOWN_RULE_KEYS
+    from .validate import check_rules
 
-        for col, rule in input_rules.items():
-            unknown = set(rule) - KNOWN_RULE_KEYS
-            if unknown:
-                hint = (
-                    " (pandera-format sections are not supported; declare "
-                    "{column: {required/isin/str_matches/in_range: ...}})"
-                    if col == "columns" else ""
-                )
-                raise MappingError(
-                    f"unknown validation rule key(s) {sorted(unknown)} for "
-                    f"column {col!r}; known: {sorted(KNOWN_RULE_KEYS)}{hint}"
-                )
+    input_rules = config.get("validate") or {}
+    try:
+        check_rules(input_rules)  # a typo or a bad value shape fails at parse time
+    except ValueError as e:
+        raise MappingError(str(e)) from None
 
     spec = MappingSpec(
         subject=subject,

@@ -17,41 +17,72 @@ str_matches, isin, in_range, not_nullable — docs/sections/validation):
         "n_chars": {"in_range": [1, 10000]},
         "text": {"str_matches": r"\\S"},
     }
+
+:func:`check_rules` rejects anything else when the mapping is parsed.
+:func:`apply_rules` is the one place a ``validate_mode`` takes effect
+(``compile_mapping`` and ``run_pipeline`` call it); it compiles each rule once.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .nulls import is_not_null
 
+#: what a mapping-level ``validate:`` section does with invalid rows
+VALIDATE_MODES = ("raise", "filter", "report")
 
-#: the full rule vocabulary — anything else is a typo or an untranslated
-#: pandera schema and must fail loudly, not compile to lit(True)
-KNOWN_RULE_KEYS = frozenset({"required", "isin", "str_matches", "in_range"})
+#: rule key -> (value check, expected shape); any other key is a typo or an
+#: untranslated pandera schema and must fail loudly, not compile to lit(True)
+_RULE_SHAPES = {
+    "required": (lambda v: isinstance(v, bool), "a bool"),
+    "isin": (lambda v: isinstance(v, (list, tuple)), "a list"),
+    "str_matches": (lambda v: isinstance(v, str), "a string"),
+    "in_range": (lambda v: isinstance(v, (list, tuple)) and len(v) == 2 and all(
+        isinstance(x, (int, float)) and not isinstance(x, bool) for x in v),
+        "two numbers [lo, hi]"),
+}
+KNOWN_RULE_KEYS = frozenset(_RULE_SHAPES)
+
+
+def check_rules(rules) -> None:
+    """Raise ``ValueError`` unless ``rules`` maps column names to rule dicts
+    whose keys are in :data:`KNOWN_RULE_KEYS` and whose values have the
+    shape each key needs. A misspelled key ('is_in'), a pasted pandera
+    section or a scalar ``isin: en`` (which would run ``IN ('e', 'n')``)
+    would otherwise validate something other than what it claims."""
+    if not isinstance(rules, dict) or not all(isinstance(r, dict) for r in rules.values()):
+        raise ValueError("`validate` must map column names to rule dicts")
+    for col, rule in rules.items():
+        if unknown := set(rule) - KNOWN_RULE_KEYS:
+            pandera = col == "columns" or {"checks", "dtype", "nullable"} & set(rule)
+            raise ValueError(
+                f"unknown validation rule key(s) {sorted(unknown)} for column {col!r}; "
+                f"known keys: {sorted(KNOWN_RULE_KEYS)}" + (
+                    " (this looks like a pandera schema section — declare rules as "
+                    "{column: {required/isin/str_matches/in_range: ...}} instead)"
+                    if pandera else ""))
+        for key, value in rule.items():
+            ok, shape = _RULE_SHAPES[key]
+            if not ok(value):
+                raise ValueError(f"validation rule {key!r} for column {col!r} must be "
+                                 f"{shape}, got {value!r}")
+
+
+def check_mode(mode: str) -> None:
+    """Raise ``ValueError`` unless ``mode`` is one of :data:`VALIDATE_MODES`."""
+    if mode not in VALIDATE_MODES:
+        raise ValueError(f"validate_mode must be raise|filter|report, got {mode!r}")
 
 
 def compile_rule(col: str, rule: dict) -> Column:
-    """One column's rule dict -> boolean Column (True = valid).
-
-    Raises ``ValueError`` on rule keys outside :data:`KNOWN_RULE_KEYS` — a
-    silent pass on a misspelled rule ('is_in', 'str_match') or on a pasted
-    pandera section would validate nothing while claiming to."""
-    unknown = set(rule) - KNOWN_RULE_KEYS
-    if unknown:
-        hint = ""
-        if {"columns", "checks", "dtype", "nullable"} & set(rule):
-            hint = (
-                " (this looks like a pandera schema section — declare rules as "
-                "{column: {required/isin/str_matches/in_range: ...}} instead)"
-            )
-        raise ValueError(
-            f"unknown validation rule key(s) {sorted(unknown)} for column {col!r}; "
-            f"known keys: {sorted(KNOWN_RULE_KEYS)}{hint}"
-        )
+    """One column's rule dict -> boolean Column (True = valid); the rule is
+    checked with :func:`check_rules` first."""
+    check_rules({col: rule})
     c = F.col(col)
     pred = F.lit(True)
     if rule.get("required"):
@@ -60,7 +91,7 @@ def compile_rule(col: str, rule: dict) -> Column:
         allowed = [str(x) for x in rule["isin"]]
         pred = pred & (c.isNull() | c.cast("string").isin(allowed))
     if "str_matches" in rule:
-        pred = pred & (c.isNull() | c.cast("string").rlike(str(rule["str_matches"])))
+        pred = pred & (c.isNull() | c.cast("string").rlike(rule["str_matches"]))
     if "in_range" in rule:
         lo, hi = rule["in_range"]
         if float(lo).is_integer() and float(hi).is_integer():
@@ -74,12 +105,34 @@ def compile_rule(col: str, rule: dict) -> Column:
     return pred
 
 
+def _compile(rules: dict[str, dict]) -> list[tuple[str, Column]]:
+    """(column, predicate) per rule, in column order: the one compile of
+    each rule that a call's filter, counts and failed-rule names share."""
+    return [(col, compile_rule(col, rules[col])) for col in sorted(rules)]
+
+
+def _all(preds: list[tuple[str, Column]]) -> Column:
+    return reduce(lambda acc, cp: acc & cp[1], preds, F.lit(True))
+
+
+def _aggs(preds: list[tuple[str, Column]]) -> list[Column]:
+    """Overall and per-rule violation counts as conditional sums: one
+    aggregation (or observation), no extra scan per rule."""
+    return [
+        F.count("*").alias("_total"),
+        F.sum(_all(preds).cast("long")).alias("_valid"),
+        *[F.sum((~p).cast("long")).alias(f"_bad_{col}") for col, p in preds],
+    ]
+
+
+def _failed(preds: list[tuple[str, Column]]) -> Column:
+    """The names of the rules a row violates (an array, empty when valid)."""
+    return F.array_compact(F.array(*[F.when(~p, F.lit(col)) for col, p in preds]))
+
+
 def validity(rules: dict[str, dict]) -> Column:
     """AND of all per-column rules (one whole-row predicate)."""
-    pred = F.lit(True)
-    for col in sorted(rules):
-        pred = pred & compile_rule(col, rules[col])
-    return pred
+    return _all(_compile(rules))
 
 
 @dataclass
@@ -91,26 +144,13 @@ class ValidationReport:
 
     @classmethod
     def from_row(cls, row, rules: dict[str, dict]) -> "ValidationReport":
-        """Build from the values of :func:`validation_aggs` (a Row, or the
-        dict an ``Observation`` returns)."""
+        """Build from the counts of :func:`validate_input` or of an
+        :func:`apply_rules` ``Observation`` (a Row, or the dict it returns)."""
         total, valid = row["_total"], row["_valid"] or 0
         return cls(
             total=total, valid=valid, invalid=total - valid,
             per_rule={col: row[f"_bad_{col}"] or 0 for col in sorted(rules)},
         )
-
-
-def validation_aggs(rules: dict[str, dict]) -> list[Column]:
-    """Overall and per-rule violation counts as conditional sums: one
-    aggregation, no extra scan per rule. Usable in ``DataFrame.agg`` or,
-    for counts taken on an action that runs anyway, ``DataFrame.observe``."""
-    aggs = [
-        F.count("*").alias("_total"),
-        F.sum(validity(rules).cast("long")).alias("_valid"),
-    ]
-    for col in sorted(rules):
-        aggs.append(F.sum((~compile_rule(col, rules[col])).cast("long")).alias(f"_bad_{col}"))
-    return aggs
 
 
 def validate_input(
@@ -122,42 +162,62 @@ def validate_input(
 
     ``raise_errors=True`` mirrors the reference's hard failure on input
     schema violation (validate.py:112-126)."""
-    report = ValidationReport.from_row(df.agg(*validation_aggs(rules)).collect()[0], rules)
+    preds = _compile(rules)
+    report = ValidationReport.from_row(df.agg(*_aggs(preds)).collect()[0], rules)
     if raise_errors and report.invalid:
         raise ValueError(
             f"input validation failed: {report.invalid}/{report.total} rows invalid; "
             f"per-rule: {report.per_rule}"
         )
-    return df.where(validity(rules)), report
+    return df.where(_all(preds)), report
+
+
+def apply_rules(
+    df: DataFrame, rules: dict[str, dict], mode: str, observe: bool = False
+) -> tuple[DataFrame, ValidationReport | Observation | None]:
+    """Apply a mapping's ``validate:`` rules under ``mode`` -> (rows to
+    extract, counts); the mode is checked even without rules.
+
+    - ``"raise"`` (the reference's InputValidator default): the first
+      invalid row fails the job, naming the violated rule columns — a
+      ``raise_error`` guard in the scan filter, no extra job or scan.
+    - ``"filter"``: drop invalid rows silently (pushed down to the scan).
+    - ``"report"``: drop invalid rows and count them per rule, eagerly with
+      :func:`validate_input` (a :class:`ValidationReport`) or, with
+      ``observe``, as an ``Observation`` on the caller's next action.
+
+    Counts are None in the other modes and when there are no rules."""
+    check_mode(mode)
+    if not rules:
+        return df, None
+    if mode == "report" and not observe:
+        return validate_input(df, rules)
+    preds = _compile(rules)
+    if mode == "raise":
+        return df.where(F.when(_all(preds), F.lit(True)).otherwise(F.raise_error(F.concat(
+            F.lit("input validation failed (violated rule column(s): "),
+            F.concat_ws(",", _failed(preds)),
+            F.lit("); use validate_mode='filter'/'report' to drop instead"),
+        )).cast("boolean"))), None
+    counts = None
+    if mode == "report":
+        counts = Observation()
+        df = df.observe(counts, *_aggs(preds))
+    return df.where(_all(preds)), counts
 
 
 def quarantine(df: DataFrame, rules: dict[str, dict]) -> DataFrame:
     """Rows that violate at least one rule, tagged with the failing columns
     (the quarantine side of a split pipeline; write it next to the run
     manifest for debugging at scale)."""
-    fails = F.array_compact(
-        F.array(*[
-            F.when(~compile_rule(col, rules[col]), F.lit(col))
-            for col in sorted(rules)
-        ])
-    )
-    return df.withColumn("_failed_rules", fails).where(F.size("_failed_rules") > 0)
-
-
-def output_validity(value: Column, rule: dict | None = None) -> Column:
-    """Per-value output validation: the SimpleOutputValidator `is_not_null`
-    fast path (validate.py:207-228), optionally strengthened with a
-    str_matches pattern (the pandera variant, validate.py:130-153)."""
-    pred = is_not_null(value)
-    if rule and "str_matches" in rule:
-        pred = pred & value.rlike(str(rule["str_matches"]))
-    return pred
+    return df.withColumn("_failed_rules", _failed(_compile(rules))).where(
+        F.size("_failed_rules") > 0)
 
 
 def graph_integrity(nodes: DataFrame, edges: DataFrame) -> dict:
     """Post-fusion graph invariants — the ``--validate-output`` gate run
-    over the FINAL graph rather than per-transformer values (which
-    ``output_validity`` already guards during extraction):
+    over the FINAL graph rather than per-transformer values (which the
+    compiler's null-skip already guards during extraction):
 
     - no null/empty node ids, no null labels, no duplicate node ids
       (fusion groups by id, so a duplicate means a broken custom merge);

@@ -109,3 +109,33 @@ def test_validate_rules_push_to_scan(spark, tmp_path):
     plan = nodes._jdf.queryExecution().executedPlan().toString()
     scan = next(l for l in plan.splitlines() if "FileScan" in l)
     assert "PushedFilters: [" in scan and "GreaterThanOrEqual(id" in scan, scan[:400]
+
+
+def test_rule_value_shapes_checked_at_parse():
+    """A rule value of the wrong shape fails when the mapping is parsed:
+    a scalar ``isin: en`` used to run ``lang IN ('e', 'n')``, and a
+    one-bound or string ``in_range`` failed later with a bare unpack error."""
+    import pytest
+
+    from ontoweaver_spark.spec import MappingError, load_mapping
+    from ontoweaver_spark.validate import compile_rule
+
+    base = {"row": {"map": {"id_from_column": "id", "to_subject": "thing"}}}
+    for rule, shape in (
+        ({"isin": "en"}, "a list"),
+        ({"in_range": [1]}, "two numbers"),
+        ({"in_range": "0-5"}, "two numbers"),
+        ({"in_range": [0, "5"]}, "two numbers"),
+        ({"str_matches": 5}, "a string"),
+        ({"required": "yes"}, "a bool"),
+    ):
+        with pytest.raises(MappingError, match=shape):
+            load_mapping({**base, "validate": {"lang": rule}})
+        with pytest.raises(ValueError, match=shape):
+            compile_rule("lang", rule)
+    with pytest.raises(MappingError, match="pandera"):
+        load_mapping({**base, "validate": {"lang": {"dtype": "str", "checks": []}}})
+    spec = load_mapping({**base, "validate": {
+        "lang": {"isin": ["en"], "required": True, "str_matches": "^e"},
+        "n": {"in_range": [0, 1.5]}}})
+    assert spec.input_rules["n"] == {"in_range": [0, 1.5]}

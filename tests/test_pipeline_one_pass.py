@@ -1,7 +1,7 @@
 """run_pipeline as one pass: each chunk is extracted by a single write,
 every manifest count is observed on an action that runs anyway (and equals a
-re-scan of what was written), and the staging layout is part of the resume
-key."""
+re-scan of what was written), the staging layout is part of the resume key,
+and a source's validation rules are applied once, before staging."""
 
 import json
 import os
@@ -9,11 +9,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ontoweaver_spark import registry, validate
 from ontoweaver_spark.compiler import EDGE_SCHEMA, NODE_SCHEMA, compile_mapping
-from ontoweaver_spark.fusion import has_property_conflict
+from ontoweaver_spark.fusion import has_property_conflict, reconciliate
 from ontoweaver_spark.mergers import EnsureIdentical
 from ontoweaver_spark.pages import WEB_KG_MAPPING, generate_pages
-from ontoweaver_spark.pipeline import run_pipeline
+from ontoweaver_spark.pipeline import _input_fingerprint, run_pipeline
 from ontoweaver_spark.validate import validate_input, validity
 
 RULES = {"lang": {"isin": ["en", "es", "fr", "de"]}}
@@ -138,3 +139,103 @@ def test_old_staging_layout_reextracts(spark, tmp_path):
     staged = os.listdir(os.path.join(out, "staging", "chunk-0"))
     assert sorted(d for d in staged if d.startswith("kind=")) == ["kind=edge", "kind=node"]
     assert "nodes" not in staged and "edges" not in staged
+
+
+def _canon(df):
+    """Rows as sorted canonical JSON lines (property values sorted too)."""
+    return sorted(json.dumps({**r.asDict(), "properties": sorted(
+        (k, sorted(v)) for k, v in (r["properties"] or {}).items())}, sort_keys=True)
+        for r in df.collect())
+
+
+@pytest.mark.parametrize("n_chunks", [1, 3])
+@pytest.mark.parametrize("mode", ["raise", "filter", "report"])
+def test_each_validate_mode_matches_compile_mapping(spark, pages_path, tmp_path, mode, n_chunks):
+    """run_pipeline applies the rules once per source, before staging; its
+    fused tables equal compile_mapping + reconciliate in the same mode, and
+    raise mode fails (a multi-chunk run on the staging write, before any
+    chunk is extracted)."""
+    inp = spark.read.parquet(pages_path)
+    out = str(tmp_path / "kg")
+    if mode == "raise":
+        with pytest.raises(Exception, match="input validation failed"):
+            run_pipeline(spark, inp, MAPPING, out, n_chunks=n_chunks, chunk_key="url",
+                         validate_mode=mode)
+        if n_chunks > 1:
+            assert not os.path.exists(os.path.join(out, "staging"))
+        return
+    rep = run_pipeline(spark, inp, MAPPING, out, n_chunks=n_chunks, chunk_key="url",
+                       validate_mode=mode)
+    res = compile_mapping(inp, MAPPING, validate_mode=mode)
+    fnodes, fedges = reconciliate(res.nodes, res.edges, raise_errors=False)
+    assert _canon(spark.read.parquet(os.path.join(out, "nodes"))) == _canon(fnodes)
+    assert _canon(spark.read.parquet(os.path.join(out, "edges"))) == _canon(fedges)
+    assert rep.rows_in == inp.where(validate.validity(RULES)).count()
+    assert ("validation" in _manifest(out)) == (mode == "report")
+    if n_chunks > 1:
+        staged = spark.read.parquet(os.path.join(out, "staging_input"))
+        assert staged.count() == rep.rows_in
+
+
+def test_rules_compile_once_per_source(spark, pages_path, tmp_path, monkeypatch):
+    """One compile_rule call per rule per compile_mapping call (raise mode
+    used to build every predicate twice, report mode three times), and one
+    per rule per source per run_pipeline call, whatever n_chunks is."""
+    calls = []
+    real = validate.compile_rule
+    monkeypatch.setattr(validate, "compile_rule",
+                        lambda col, rule: calls.append(col) or real(col, rule))
+    inp = spark.read.parquet(pages_path)
+    mapping = {**MAPPING, "validate": {**RULES, "url": {"required": True}}}
+    for mode in ("raise", "filter", "report"):
+        calls.clear()
+        compile_mapping(inp, mapping, validate_mode=mode).elements
+        assert sorted(calls) == ["lang", "url"], mode
+    for mode, n_chunks in (("report", 1), ("report", 3), ("filter", 3)):
+        calls.clear()
+        run_pipeline(spark, [inp, inp], [mapping, MAPPING], str(tmp_path / f"{mode}{n_chunks}"),
+                     n_chunks=n_chunks, chunk_key="url", validate_mode=mode)
+        assert sorted(calls) == ["lang", "lang", "url"], (mode, n_chunks)
+
+
+def test_unknown_validate_mode_fails_before_spark_work(spark, tmp_path):
+    """An unknown mode is rejected even when the mapping has no rules, and
+    run_pipeline rejects it before it reads or writes anything."""
+    df = spark.createDataFrame([("a", "en")], "url string, lang string")
+    mapping = {"row": {"map": {"id_from_column": "url", "to_subject": "page"}}}
+    with pytest.raises(ValueError, match="validate_mode must be"):
+        compile_mapping(df, mapping, validate_mode="drop")
+    out = str(tmp_path / "kg")
+    with pytest.raises(ValueError, match="validate_mode must be"):
+        run_pipeline(spark, str(tmp_path / "no-such-input"), mapping, out,
+                     validate_mode="drop")
+    assert not os.path.exists(out)
+
+
+def test_raw_staged_input_restages(spark, pages_path, tmp_path):
+    """An out_dir from a multi-chunk filter run of the former layout holds
+    raw rows in staging_input (the rules ran per chunk, at compile). The
+    chunks now compile without rules, so the run must re-stage those rows
+    through the rules instead of extracting invalid rows."""
+    inp = spark.read.parquet(pages_path)
+    fresh = run_pipeline(spark, inp, MAPPING, str(tmp_path / "fresh"), n_chunks=3,
+                         chunk_key="url", validate_mode="filter")
+
+    out = str(tmp_path / "old")
+    stage_in = os.path.join(out, "staging_input")
+    (inp.withColumn("_ow_chunk", F.pmod(F.xxhash64("url"), F.lit(3)))
+     .write.partitionBy("_ow_chunk").parquet(stage_in))
+    conf = {"mapping_hash": fresh.mapping_hash, "affix": "none", "type_affix_sep": ":",
+            "n_chunks": 3, "chunk_key": "url", "validate_mode": "filter",
+            "staging": "elements", "inputs": [_input_fingerprint(inp)],
+            "transformers": registry.fingerprint()}
+    with open(os.path.join(out, "_manifest.json"), "w") as f:
+        json.dump({"extract_conf": conf, "mapping_hash": fresh.mapping_hash,
+                   "final": None, "chunks": {}, "input_staged": [0]}, f)
+
+    rep = run_pipeline(spark, inp, MAPPING, out, n_chunks=3, chunk_key="url",
+                       validate_mode="filter")
+    assert rep.chunks_extracted == 3
+    assert rep.rows_in == fresh.rows_in < inp.count()
+    assert spark.read.parquet(stage_in).count() == fresh.rows_in
+    assert (rep.fused_nodes, rep.fused_edges) == (fresh.fused_nodes, fresh.fused_edges)

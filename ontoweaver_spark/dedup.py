@@ -1142,6 +1142,12 @@ def jaccard_pairs_prefix(
     operator computes plain all-shared-pairs Jaccard with NO prefix
     machinery, so the filter's LOSSLESSNESS is itself the checked
     property.
+
+    Input contract: ``id_col`` must be unique. Nothing checks it: a
+    duplicated id pools two documents' shingles under one id, which
+    inflates its set size and gives wrong similarities. Building the
+    result is not lazy: the verify side's broadcast size gate
+    (``OW_VERIFY_BCAST_ROWS``) runs one eager ``count()`` at call time.
     """
     if not 0 < threshold <= 1:
         raise ValueError("prefix filtering needs a threshold in (0, 1]")
@@ -1294,6 +1300,12 @@ def containment_pairs_prefix(
     this operator computes plain all-pairs containment with no prefix
     machinery, so the filter's losslessness is itself the checked
     property (same adjudication as :func:`jaccard_pairs_prefix`).
+
+    Input contract: ``id_col`` must be unique. Nothing checks it: a
+    duplicated id pools two documents' shingles under one id, which
+    inflates its set size and gives wrong similarities. Building the
+    result is not lazy: the verify side's broadcast size gate
+    (``OW_VERIFY_BCAST_ROWS``) runs one eager ``count()`` at call time.
     """
     if not 0 < threshold <= 1:
         raise ValueError("prefix filtering needs a threshold in (0, 1]")
@@ -1505,6 +1517,14 @@ def cosine_pairs_l2ap(
     window partitioned per doc), a self-join restricted to the indexed
     prefixes, and a pair-keyed partial-aggregated dot product; nothing
     is all-pairs, nothing collects.
+
+    Input contract: ``id_col`` must be unique. Nothing checks it: a
+    duplicated id pools two documents' term counts under one id, which
+    inflates its vector and gives wrong similarities; under the
+    broadcast gate the verify fails instead, with a ``map_from_entries``
+    duplicate-key error. Building the result is not lazy: the verify
+    side's broadcast size gate (``OW_VERIFY_BCAST_ROWS``) runs one eager
+    ``count()`` at call time.
     """
     if not 0 < threshold <= 1:
         raise ValueError("prefix filtering needs a threshold in (0, 1]")

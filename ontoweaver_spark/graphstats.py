@@ -10,11 +10,96 @@ keyed by node id, map-side partials absorb the explode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 from .textops import md5_int
 from .session import Converged, fixpoint, stats_reset_checkpoint
+
+
+# ---- edge-input normalization --------------------------------------------
+# Every operator below starts from one of these frames instead of projecting,
+# orienting, de-looping, de-duplicating and pinning its input by hand. Each
+# takes ``pin``: the default lazy local checkpoint, ``stats_reset_checkpoint``
+# (eager, for loops whose later rounds must not inherit compounded size
+# estimates), another callable, or None for a plan the caller pins itself.
+
+
+def _lazy_pin(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
+
+
+def _pinned(df: DataFrame, pin) -> DataFrame:
+    return pin(df) if pin else df
+
+
+def _ends(src_col: str, dst_col: str, cast: str | None):
+    s, d = F.col(src_col), F.col(dst_col)
+    return (s.cast(cast), d.cast(cast)) if cast else (s, d)
+
+
+def _directed(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    symmetric: bool = False,
+    loops: bool = True,
+    cast: str | None = None,
+    pin=_lazy_pin,
+) -> DataFrame:
+    """The distinct directed edge list ``(s, d)``. ``symmetric`` adds every
+    edge's reverse (an operator's ``directed=False``), ``loops=False``
+    drops ``s == d``, ``cast`` casts both endpoints first."""
+    s, d = _ends(src_col, dst_col, cast)
+    e = edges.select(s.alias("s"), d.alias("d"))
+    if symmetric:
+        e = e.unionAll(edges.select(d.alias("s"), s.alias("d")))
+    if not loops:
+        e = e.where(F.col("s") != F.col("d"))
+    return _pinned(e.distinct(), pin)
+
+
+def _undirected(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    cast: str | None = None,
+    pin=_lazy_pin,
+) -> DataFrame:
+    """The canonical simple undirected edge list ``(u, v)``: ``u < v``, no
+    self-loops, each edge once whatever its input orientation."""
+    s, d = _ends(src_col, dst_col, cast)
+    e = (
+        edges.select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    return _pinned(e, pin)
+
+
+def _mirrored(und: DataFrame, pin=_lazy_pin) -> DataFrame:
+    """Both directions ``(u, v)`` of a canonical :func:`_undirected` list —
+    the same rows as a symmetric loop-free :func:`_directed` list, with the
+    distinct paid on half of them."""
+    return _pinned(und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v"))), pin)
+
+
+def _nodes(e: DataFrame, *cols: str, pin=None) -> DataFrame:
+    """The distinct ``node`` values found in ``cols`` of an edge list."""
+    nodes = e.select(F.col(cols[0]).alias("node"))
+    for c in cols[1:]:
+        nodes = nodes.unionAll(e.select(F.col(c).alias("node")))
+    return _pinned(nodes.distinct(), pin)
+
+
+def _degrees(und: DataFrame, name: str = "deg") -> DataFrame:
+    """``(node, <name>)`` undirected degrees of a canonical ``(u, v)`` list."""
+    return (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select("v"))
+        .groupBy("node")
+        .agg(F.count("*").alias(name))
+    )
 
 
 def degree_stats(
@@ -88,10 +173,7 @@ def k_hop_neighborhood(
     when the frontier empties. k bounded-size shuffles keyed on node id —
     never a full-graph traversal beyond the reachable set.
     """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
-    e = e.distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed)
 
     frontier = seeds.select(F.col("node")).distinct().localCheckpoint(eager=False)
     visited = frontier.withColumn("hop", F.lit(0))
@@ -202,11 +284,7 @@ def pagerank_fixed_point(
     weights down if both are huge.
     """
     if weight_col is None:
-        e = (
-            edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        e = _directed(edges, src_col, dst_col)
         contrib = "rank DIV od"
     else:
         e = (
@@ -226,12 +304,7 @@ def pagerank_fixed_point(
     # and checkpoint, instead of re-paying an edge-list-sized join every
     # iteration (the edge frame is the big side of the loop)
     e = e.join(outd, "s").localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     teleport = ((100 - damping_pct) * scale) // 100
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
     for _ in range(iterations):
@@ -252,6 +325,35 @@ def pagerank_fixed_point(
             .transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
         )
     return ranks
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """Every triangle of a canonical ``(u, v)`` list once, as ``(a, b, c)``
+    with ``a`` its lowest-(degree, id) corner and ``b < c``: each edge is
+    oriented from its lower-(degree, id) endpoint (a tie orients u -> v),
+    wedges are a self-join on the low endpoint and close by one join back
+    to ``e``. The oriented frame is pinned lazily so the wedge self-join
+    reads it once."""
+    deg = _degrees(e, "d")
+    ed = (
+        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
+        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+    )
+    lo_is_u = F.col("du") <= F.col("dv")
+    oriented = ed.select(
+        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
+        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
+    ).localCheckpoint(eager=False)
+    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
+    wedges = o1.join(
+        o2, (F.col("o1.lo") == F.col("o2.lo")) & (F.col("o1.hi") < F.col("o2.hi"))
+    ).select(
+        F.col("o1.lo").alias("a"), F.col("o1.hi").alias("b"), F.col("o2.hi").alias("c")
+    )
+    # b < c by the wedge condition, and e is canonical (u < v): close directly
+    return wedges.join(
+        e, (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")), "inner"
+    ).select("a", "b", "c")
 
 
 def triangle_count(
@@ -275,39 +377,7 @@ def triangle_count(
     node never explodes: its edges are all oriented INTO it unless the
     neighbor is an even bigger hub.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    ed = (
-        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-    )
-    # ties in degree break by id; u < v always, so a tie orients u -> v
-    lo_is_u = (F.col("du") < F.col("dv")) | (F.col("du") == F.col("dv"))
-    oriented = ed.select(
-        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    ).localCheckpoint(eager=False)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2, (F.col("o1.lo") == F.col("o2.lo")) & (F.col("o1.hi") < F.col("o2.hi"))
-    ).select(
-        F.col("o1.lo").alias("a"), F.col("o1.hi").alias("b"), F.col("o2.hi").alias("c")
-    )
-    # b < c by the wedge condition, and e is canonical (u < v): close directly
-    tri = wedges.join(
-        e, (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")), "inner"
-    ).select("a", "b", "c")
+    tri = _triangles(_undirected(edges, src_col, dst_col))
     corners = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select("b"))
@@ -344,24 +414,10 @@ def k_core(
     frame — cheap and shrinking. Rounds needed = core number spread, in
     practice a handful on web graphs.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def degrees(ed):
-        return (
-            ed.select(F.col("u").alias("node"))
-            .unionAll(ed.select("v"))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+    e = _undirected(edges, src_col, dst_col)
 
     def peel(e, _):
-        bad = degrees(e).where(F.col("deg") < k).select("node")
+        bad = _degrees(e).where(F.col("deg") < k).select("node")
         if exact_rounds is None:
             bad = bad.transform(stats_reset_checkpoint)  # eager: counted AND reused by the joins
             if bad.count() == 0:
@@ -377,7 +433,7 @@ def k_core(
         error=f"k_core did not converge in {max_rounds} rounds; the graph "
         "has a long peel cascade — raise max_rounds",
     )
-    return degrees(e)
+    return _degrees(e)
 
 
 def label_propagation(
@@ -411,21 +467,13 @@ def label_propagation(
     its key's partials — never as a row explosion on one task. Labels
     travel as the node ids they start from; no Python anywhere.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(u.alias("a"), v.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .unionAll(edges.select(v.alias("a"), u.alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = e.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=True, loops=False)
+    nodes = _nodes(e, "s", pin=_lazy_pin)
     labels = nodes.select("node", F.col("node").alias("community"))
     for _ in range(rounds):
         neigh = e.join(
-            labels.select(F.col("node").alias("b"), "community"), "b"
-        ).select(F.col("a").alias("node"), "community")
+            labels.select(F.col("node").alias("d"), "community"), "d"
+        ).select(F.col("s").alias("node"), "community")
         counts = neigh.groupBy("node", "community").agg(F.count("*").alias("cnt"))
         labels = (
             counts.groupBy("node")
@@ -475,16 +523,10 @@ def random_walks(
     never into a row flood at one reducer. Plan depth stays O(1) per
     round via lazy localCheckpoint.
     """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-    e = e.where(F.col("s") != F.col("d")).distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed, loops=False)
 
     starts = (
-        e.select(F.col("s").alias("node"))
-        .distinct()
+        _nodes(e, "s")
         .crossJoin(
             F.broadcast(
                 e.sparkSession.range(walks_per_node).select(
@@ -547,22 +589,11 @@ def link_prediction_scores(
     the cap) -> one (a, b) count/sum agg with map-side partials -> one
     anti-join against the edge set to drop existing edges.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("u").alias("z"))
-        .unionAll(e.select("v"))
-        .groupBy("z")
-        .agg(F.count("*").alias("dz"))
-    )
+    e = _undirected(edges, src_col, dst_col)
+    deg = _degrees(e, "dz").withColumnRenamed("node", "z")
     adj = (
-        e.select(F.col("u").alias("z"), F.col("v").alias("n"))
-        .unionAll(e.select(F.col("v").alias("z"), F.col("u").alias("n")))
+        _mirrored(e, pin=None)
+        .select(F.col("u").alias("z"), F.col("v").alias("n"))
         .join(deg.where(F.col("dz") <= max_degree), "z")
         .localCheckpoint(eager=False)
     )
@@ -618,18 +649,8 @@ def hits_fixed_point(
     aggregate broadcast back over the scores (a broadcast nested-loop
     against a 1-row frame, never a shuffle of the scores themselves).
     """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, loops=False)
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
 
     def _norm(scored: DataFrame, col: str) -> DataFrame:
         mx = scored.agg(F.greatest(F.max(col), F.lit(1)).alias("_mx"))
@@ -772,11 +793,7 @@ def negative_triples(
     from .textops import md5_int
 
     edges = edges.select(src_col, label_col, dst_col).distinct()
-    nodes = (
-        edges.select(F.col(src_col).alias("_node"))
-        .unionByName(edges.select(F.col(dst_col).alias("_node")))
-        .distinct()
-    )
+    nodes = _nodes(edges, src_col, dst_col).withColumnRenamed("node", "_node")
     indexed = with_row_index(nodes.orderBy("_node").localCheckpoint(eager=False), "_idx")
     # count from the plain nodes frame — the same number as counting the
     # indexed frame, without dragging the zip-with-index machinery into a
@@ -889,22 +906,9 @@ def modularity(
     the smaller side); the per-community degree rollup is one more agg.
     Everything reduces to three 1-row frames crossed at the end.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src_col, dst_col)
     m = und.agg(F.count("*").alias("m"))
-    deg = (
-        und.select(F.col("u").alias(node_col))
-        .unionByName(und.select(F.col("v").alias(node_col)))
-        .groupBy(node_col)
-        .agg(F.count("*").alias("_d"))
-    )
+    deg = _degrees(und, "_d").withColumnRenamed("node", node_col)
     comm = communities.select(F.col(node_col), F.col(community_col))
     intra = (
         und.join(comm.select(F.col(node_col).alias("u"), F.col(community_col).alias("_cu")), "u")
@@ -954,17 +958,9 @@ def personalized_pagerank(
     as a 0/1 column on the node frame (one left join at setup), never a
     per-round lookup.
     """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col)
     outd = e.groupBy("s").agg(F.count("*").alias("od"))
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e, "s", "d")
     # out-degrees are loop-invariant: attach once (pagerank_fixed_point)
     e = e.join(outd, "s").localCheckpoint(eager=False)
     seed_nodes = seeds.select(F.col(node_col).alias("node")).distinct()
@@ -1022,14 +1018,7 @@ def community_graph(
     quadratic-feeling hub-pair fan-in because the distinct edge list was
     already linear.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col, pin=None)
     comm = communities.select(F.col(node_col), F.col(community_col))
     labeled = und.join(
         comm.select(F.col(node_col).alias("u"), F.col(community_col).alias("_cu")), "u"
@@ -1199,20 +1188,11 @@ def strongly_connected_components(
     """
     from .ontology import subclass_closure
 
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("s"),
-            F.col(dst_col).cast("string").alias("d"),
-        )
-        .where(F.col("s").isNotNull() & F.col("d").isNotNull())
-        .distinct()
+    e = _directed(
+        edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()),
+        src_col, dst_col, cast="string", pin=None,
     )
-    nodes_all = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select("d"))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes_all = _nodes(e, "s", "d", pin=lambda n: n.localCheckpoint())
 
     core = e.where(F.col("s") != F.col("d")).localCheckpoint()
     prev = -1
@@ -1453,12 +1433,7 @@ def landmark_distances(
     whole point is k << n); the per-round aggregate combines map-side.
     The hop-count metric keeps everything BIGINT-exact.
     """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-    e = e.distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed)
 
     dist = (
         landmarks.select(F.col(landmarks.columns[0]).alias("landmark"))
@@ -1662,19 +1637,8 @@ def clustering_coefficient(
     ``2 * triangles * scale < 2^63`` per node — a node in 4.6e12/scale
     triangles; document-graph safe at any realistic scale.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    e = _undirected(edges, src_col, dst_col)
+    deg = _degrees(e, "degree")
     tri = triangle_count(e, src_col="u", dst_col="v")
     return (
         deg.join(tri, "node", "left")
@@ -1716,19 +1680,8 @@ def degree_assortativity(
     """
     from .textops import round_ieee
 
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    e = _undirected(edges, src_col, dst_col)
+    deg = _degrees(e, "d")
     annotated = (
         e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("ju")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("d").alias("jv")), "v")
@@ -1754,30 +1707,7 @@ def _edge_support(e: DataFrame) -> DataFrame:
     degree-ordered wedge enumeration as :func:`triangle_count` (hub
     out-adjacency bounded O(sqrt m)), but emitting each triangle's three
     EDGES instead of its corners."""
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    ed = (
-        e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-    )
-    lo_is_u = F.col("du") <= F.col("dv")
-    oriented = ed.select(
-        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    ).localCheckpoint(eager=False)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2, (F.col("o1.lo") == F.col("o2.lo")) & (F.col("o1.hi") < F.col("o2.hi"))
-    ).select(
-        F.col("o1.lo").alias("a"), F.col("o1.hi").alias("b"), F.col("o2.hi").alias("c")
-    )
-    tri = wedges.join(
-        e, (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")), "inner"
-    ).select("a", "b", "c")
+    tri = _triangles(e)
     sides = (
         tri.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
         .unionAll(tri.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")))
@@ -1816,12 +1746,7 @@ def k_truss(
         raise ValueError(f"k-truss requires k >= 3, got {k}")
     if exact_rounds is not None and exact_rounds < 1:
         raise ValueError("exact_rounds must be >= 1")
-    u, v = F.col(src_col), F.col(dst_col)
-    e = stats_reset_checkpoint(
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _undirected(edges, src_col, dst_col, pin=stats_reset_checkpoint)
     # the (count, hash-sum) probe of the incoming frame makes round 1
     # comparable: a round that drops no edge leaves both unchanged
     return fixpoint(
@@ -1878,16 +1803,10 @@ def node2vec_walks(
     """
     if min(w_return, w_near, w_far) < 1:
         raise ValueError("weights must be positive integers")
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-    e = e.where(F.col("s") != F.col("d")).distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed, loops=False)
 
     starts = (
-        e.select(F.col("s").alias("node"))
-        .distinct()
+        _nodes(e, "s")
         .select(
             F.concat(F.col("node"), F.lit("#0")).alias("walk_id"), "node"
         )
@@ -1982,12 +1901,7 @@ def betweenness_landmark(
     map-side-combinable sum. Everything keyed on (landmark, node) — hub
     fan-in lands in aggregate partials.
     """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-    e = e.where(F.col("s") != F.col("d")).distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed, loops=False)
 
     dist = stats_reset_checkpoint(
         landmark_distances(e, landmarks, rounds, src_col="s", dst_col="d"),
@@ -2095,18 +2009,9 @@ def neighborhood_function(
     """
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.unionAll(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-    e = e.where(F.col("s") != F.col("d")).distinct().localCheckpoint(eager=False)
+    e = _directed(edges, src_col, dst_col, symmetric=not directed, loops=False)
 
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-    )
+    nodes = _nodes(e, "s", "d")
     sketch = stats_reset_checkpoint(
         nodes.select("node", md5_int(F.col("node")).alias("h")), eager=False
     )
@@ -2171,22 +2076,12 @@ def densest_subgraph(
     broadcast, two anti-joins on the shrinking edge frame; the frame
     only shrinks and every frame passes ``stats_reset_checkpoint``.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = stats_reset_checkpoint(
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _undirected(edges, src_col, dst_col, pin=stats_reset_checkpoint)
     trace = []
     spark = e.sparkSession
 
     def peel(e, i):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select("v"))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+        deg = _degrees(e)
         st = deg.agg(
             F.count("*").alias("nv"), F.sum("deg").alias("deg2")
         ).first()
@@ -2293,15 +2188,7 @@ def maximal_independent_set(
     after ``rounds`` non-empty rounds when ``require_convergence`` (the
     loud-failure convention shared with connected_components).
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(u.alias("a"), v.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .unionAll(edges.select(v.alias("a"), u.alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, symmetric=True, loops=False)
     key = F.concat(
         F.lpad(
             md5_int(F.concat_ws(":", F.lit(str(seed)), F.col("node"))).cast("string"),
@@ -2310,12 +2197,7 @@ def maximal_independent_set(
         ),
         F.col("node"),
     )
-    act = (
-        e.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("k", key)
-        .transform(stats_reset_checkpoint)
-    )
+    act = _nodes(e, "s").withColumn("k", key).transform(stats_reset_checkpoint)
     spark = edges.sparkSession
 
     def empty(st):
@@ -2326,8 +2208,8 @@ def maximal_independent_set(
             return Converged(st)
         act, selected = st
         nbr_min = (
-            e.join(act.select(F.col("node").alias("b"), F.col("k").alias("bk")), "b")
-            .groupBy(F.col("a").alias("node"))
+            e.join(act.select(F.col("node").alias("d"), F.col("k").alias("bk")), "d")
+            .groupBy(F.col("s").alias("node"))
             .agg(F.min("bk").alias("mk"))
         )
         winners = (
@@ -2339,8 +2221,8 @@ def maximal_independent_set(
         selected = selected.unionByName(
             winners.withColumn("sel_round", F.lit(i))
         ).transform(lambda _d: stats_reset_checkpoint(_d, eager=False))
-        hit = e.join(winners.select(F.col("node").alias("a")), "a").select(
-            F.col("b").alias("node")
+        hit = e.join(winners.select(F.col("node").alias("s")), "s").select(
+            F.col("d").alias("node")
         )
         act = (
             act.join(winners, "node", "left_anti")
@@ -2396,15 +2278,7 @@ def greedy_coloring(
     stats-reset-checkpointed so Catalyst re-estimates the shrinking
     active set instead of compounding snapshots.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(u.alias("a"), v.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .unionAll(edges.select(v.alias("a"), u.alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, symmetric=True, loops=False)
     key = F.concat(
         F.lpad(
             md5_int(F.concat_ws(":", F.lit(str(seed)), F.col("node"))).cast("string"),
@@ -2413,12 +2287,7 @@ def greedy_coloring(
         ),
         F.col("node"),
     )
-    act = (
-        e.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("k", key)
-        .transform(stats_reset_checkpoint)
-    )
+    act = _nodes(e, "s").withColumn("k", key).transform(stats_reset_checkpoint)
     spark = edges.sparkSession
     colored = spark.createDataFrame([], "node string, color int, col_round int")
     mex = F.aggregate(
@@ -2444,18 +2313,18 @@ def greedy_coloring(
         # (~8 exchanges per round down to ~5; min/collect_set both
         # ignore the other leg's NULLs, preserving the exact semantics).
         state = act.select(
-            F.col("node").alias("b"), F.col("k").alias("bk"),
+            F.col("node").alias("d"), F.col("k").alias("bk"),
             F.lit(None).cast("int").alias("bc"),
         ).unionByName(
             colored.select(
-                F.col("node").alias("b"),
+                F.col("node").alias("d"),
                 F.lit(None).cast("string").alias("bk"),
                 F.col("color").alias("bc"),
             )
         )
         nbr = (
-            e.join(state, "b")
-            .groupBy(F.col("a").alias("node"))
+            e.join(state, "d")
+            .groupBy(F.col("s").alias("node"))
             .agg(
                 F.min("bk").alias("mk"),
                 F.array_sort(F.collect_set("bc")).alias("_used"),
@@ -2492,6 +2361,23 @@ def greedy_coloring(
         if require_convergence else None,
     )
     return colored
+
+
+def _component_pairs(
+    edges: DataFrame, component_col: str, src_col: str, dst_col: str
+) -> GroupedData:
+    """Loop-free ``(_comp, a, b)`` string pairs grouped by component — the
+    input of the bounded-component kernels below (each kernel dedups its
+    own adjacency sets, so no distinct here)."""
+    return (
+        edges.select(
+            F.col(component_col).alias("_comp"),
+            F.col(src_col).cast("string").alias("a"),
+            F.col(dst_col).cast("string").alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .groupBy("_comp")
+    )
 
 
 def greedy_coloring_local(
@@ -2564,13 +2450,7 @@ def greedy_coloring_local(
             active -= ready
         return pd.DataFrame(out, columns=["node", "color", "col_round"])
 
-    u, v = F.col(src_col), F.col(dst_col)
-    pairs = edges.select(
-        F.col(component_col).alias("_comp"),
-        u.cast("string").alias("a"),
-        v.cast("string").alias("b"),
-    ).where(F.col("a") != F.col("b"))
-    return pairs.groupBy("_comp").applyInPandas(
+    return _component_pairs(edges, component_col, src_col, dst_col).applyInPandas(
         _color_block, "node string, color int, col_round int"
     )
 
@@ -2652,13 +2532,7 @@ def bridges_local(
                             out.append((u, v))
         return pd.DataFrame(out, columns=["src", "dst"])
 
-    u, v = F.col(src_col), F.col(dst_col)
-    pairs = edges.select(
-        F.col(component_col).alias("_comp"),
-        u.cast("string").alias("a"),
-        v.cast("string").alias("b"),
-    ).where(F.col("a") != F.col("b"))
-    return pairs.groupBy("_comp").applyInPandas(
+    return _component_pairs(edges, component_col, src_col, dst_col).applyInPandas(
         _bridges, "src string, dst string"
     )
 
@@ -2728,13 +2602,7 @@ def articulation_points_local(
                 cuts.add(root)
         return pd.DataFrame(sorted(cuts), columns=["node"])
 
-    u, v = F.col(src_col), F.col(dst_col)
-    pairs = edges.select(
-        F.col(component_col).alias("_comp"),
-        u.cast("string").alias("a"),
-        v.cast("string").alias("b"),
-    ).where(F.col("a") != F.col("b"))
-    return pairs.groupBy("_comp").applyInPandas(_cuts, "node string")
+    return _component_pairs(edges, component_col, src_col, dst_col).applyInPandas(_cuts, "node string")
 
 
 def two_edge_components_local(
@@ -2819,13 +2687,7 @@ def two_edge_components_local(
             out.extend((n0, lab) for n0 in comp)
         return pd.DataFrame(sorted(out), columns=["node", "tecc"])
 
-    u, v = F.col(src_col), F.col(dst_col)
-    pairs = edges.select(
-        F.col(component_col).alias("_comp"),
-        u.cast("string").alias("a"),
-        v.cast("string").alias("b"),
-    ).where(F.col("a") != F.col("b"))
-    return pairs.groupBy("_comp").applyInPandas(
+    return _component_pairs(edges, component_col, src_col, dst_col).applyInPandas(
         _tecc, "node string, tecc string"
     )
 
@@ -2880,9 +2742,7 @@ def min_spanning_forest(
         .localCheckpoint(eager=False)
     )
     comp = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
+        _nodes(e, "u", "v")
         .withColumn("comp", F.col("node"))
         .transform(stats_reset_checkpoint)
     )
@@ -3120,31 +2980,26 @@ def neighbor_jaccard(
     the capped neighborhoods" — a well-defined, oracle-checkable
     semantic rather than a silent approximation.
     """
-    und = (
-        edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
-        .unionAll(edges.select(F.col(dst_col), F.col(src_col)))
-        .where(F.col("x") != F.col("y"))
-        .distinct()
-    )
+    und = _directed(edges, src_col, dst_col, symmetric=True, loops=False, pin=None)
     if max_degree is not None:
-        nbr_deg = und.groupBy("y").agg(F.count("*").alias("nd"))
+        nbr_deg = und.groupBy("d").agg(F.count("*").alias("nd"))
         und = (
-            und.join(nbr_deg.where(F.col("nd") <= max_degree), "y")
-            .select("x", "y")
+            und.join(nbr_deg.where(F.col("nd") <= max_degree), "d")
+            .select("s", "d")
         )
     und = und.localCheckpoint(eager=False)
-    deg = und.groupBy("x").agg(F.count("*").alias("deg"))
+    deg = und.groupBy("s").agg(F.count("*").alias("deg"))
     pairs = (
-        und.select(F.col("y"), F.col("x").alias("a"))
-        .join(und.select(F.col("y"), F.col("x").alias("b")), "y")
+        und.select(F.col("d"), F.col("s").alias("a"))
+        .join(und.select(F.col("d"), F.col("s").alias("b")), "d")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count("*").alias("common"))
         .where(F.col("common") >= min_common)
     )
     out = (
-        pairs.join(deg.select(F.col("x").alias("a"), F.col("deg").alias("degree_a")), "a")
-        .join(deg.select(F.col("x").alias("b"), F.col("deg").alias("degree_b")), "b")
+        pairs.join(deg.select(F.col("s").alias("a"), F.col("deg").alias("degree_a")), "a")
+        .join(deg.select(F.col("s").alias("b"), F.col("deg").alias("degree_b")), "b")
         # BIGINT DIV: exact, engine-identical (float-divide-then-floor can
         # land one off when the quotient sits on an integer boundary)
         .withColumn(
@@ -3181,27 +3036,22 @@ def transitive_reduction(
     """
     from .ontology import subclass_closure
 
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, cast="string")
     closure = subclass_closure(
-        e, child_col="src", parent_col="dst", max_rounds=max_rounds
+        e, child_col="s", parent_col="d", max_rounds=max_rounds
     )
     via2 = (
-        closure.select(F.col("descendant").alias("src"), F.col("ancestor").alias("m"))
+        closure.select(F.col("descendant").alias("s"), F.col("ancestor").alias("m"))
         .join(
-            closure.select(F.col("descendant").alias("m"), F.col("ancestor").alias("dst")),
+            closure.select(F.col("descendant").alias("m"), F.col("ancestor").alias("d")),
             "m",
         )
-        .select("src", "dst")
+        .select("s", "d")
         .distinct()
     )
-    return e.join(via2, ["src", "dst"], "left_anti")
+    return e.join(via2, ["s", "d"], "left_anti").select(
+        F.col("s").alias("src"), F.col("d").alias("dst")
+    )
 
 
 def wl_colors(
@@ -3230,20 +3080,13 @@ def wl_colors(
     sorted multiset would not — acceptable for a refinement heuristic
     and documented here.
     """
-    und = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .unionAll(edges.select(F.col(dst_col), F.col(src_col)))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = und.select(F.col("u").alias("node")).distinct()
-    colors = nodes.withColumn("color", md5_int(F.lit("wl0")))
+    und = _directed(edges, src_col, dst_col, symmetric=True, loops=False)
+    colors = _nodes(und, "s").withColumn("color", md5_int(F.lit("wl0")))
     for _ in range(rounds):
         nbr = und.join(
-            colors.select(F.col("node").alias("v"), F.col("color").alias("nc")), "v"
+            colors.select(F.col("node").alias("d"), F.col("color").alias("nc")), "d"
         )
-        folded = nbr.groupBy(F.col("u").alias("node")).agg(
+        folded = nbr.groupBy(F.col("s").alias("node")).agg(
             F.sum(F.pmod(F.col("nc"), F.lit(2147483647))).alias("msum"),
             F.count("*").alias("mcnt"),
         )
@@ -3295,17 +3138,7 @@ def core_numbers(
     same contract as k_core); default runs to fixpoint and raises
     loudly past ``max_rounds``.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    und = (
-        und.select("u", "v")
-        .unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
+    und = _mirrored(_undirected(edges, src_col, dst_col, pin=None))
     est = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").alias("est")
     ).transform(stats_reset_checkpoint)
@@ -3433,9 +3266,7 @@ def maximal_matching(
         matched = matched.unionByName(sel).transform(
             lambda d: stats_reset_checkpoint(d, eager=False)
         )
-        touched = sel.select(F.col("u").alias("node")).unionAll(
-            sel.select(F.col("v"))
-        ).distinct()
+        touched = _nodes(sel, "u", "v")
         e = (
             e.join(touched.select(F.col("node").alias("u")), "u", "left_anti")
             .join(touched.select(F.col("node").alias("v")), "v", "left_anti")
@@ -3511,14 +3342,9 @@ def reciprocity(
     the ppm is exact BIGINT division so the one-row result hash-matches
     any engine.
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    rev = e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    rec = e.join(rev, ["u", "v"], "left_semi")
+    e = _directed(edges, src_col, dst_col, loops=False)
+    rev = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    rec = e.join(rev, ["s", "d"], "left_semi")
     return (
         e.agg(F.count("*").alias("n_edges"))
         .crossJoin(rec.agg(F.count("*").alias("n_reciprocal")))
@@ -3554,24 +3380,14 @@ def katz_fixed_point(
     and aggregation order and hash-matches a SQL oracle. Each round is
     one edge join + one map-side-combined sum keyed on the destination.
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, loops=False)
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     katz = nodes.withColumn("katz", F.lit(scale).cast("long"))
     base = katz
     for _ in range(iterations):
         inbound = (
-            e.join(katz.select(F.col("node").alias("u"), "katz"), "u")
-            .groupBy(F.col("v").alias("node"))
+            e.join(katz.select(F.col("node").alias("s"), "katz"), "s")
+            .groupBy(F.col("d").alias("node"))
             .agg(F.sum(F.expr(f"katz DIV {int(alpha_inv)}")).alias("inb"))
         )
         katz = (
@@ -3602,16 +3418,8 @@ def square_count(
     ``max_degree`` — here the count must be exact, so it is documented
     rather than capped.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    both = (
-        und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src_col, dst_col, pin=None)
+    both = _mirrored(und)
     wedge_pairs = (
         both.select(F.col("v").alias("m"), F.col("u").alias("a"))
         .join(both.select(F.col("v").alias("m"), F.col("u").alias("c")), "m")
@@ -3737,36 +3545,8 @@ def truss_numbers(
     """
     if exact_rounds is not None and exact_rounds < 0:
         raise ValueError("exact_rounds must be >= 0")
-    u, v = F.col(src_col), F.col(dst_col)
-    e = stats_reset_checkpoint(
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    # triangle enumeration: same degree-ordered wedges as _edge_support
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
-    ed = e.join(
-        deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u"
-    ).join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-    lo_is_u = F.col("du") <= F.col("dv")
-    oriented = ed.select(
-        F.when(lo_is_u, F.col("u")).otherwise(F.col("v")).alias("lo"),
-        F.when(lo_is_u, F.col("v")).otherwise(F.col("u")).alias("hi"),
-    ).localCheckpoint(eager=False)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2, (F.col("o1.lo") == F.col("o2.lo")) & (F.col("o1.hi") < F.col("o2.hi"))
-    ).select(
-        F.col("o1.lo").alias("a"), F.col("o1.hi").alias("b"), F.col("o2.hi").alias("c")
-    )
-    tri = wedges.join(
-        e, (F.col("b") == F.col("u")) & (F.col("c") == F.col("v")), "inner"
-    ).select("a", "b", "c")
+    e = _undirected(edges, src_col, dst_col, pin=stats_reset_checkpoint)
+    tri = _triangles(e)
     ab_u, ab_v = F.least("a", "b"), F.greatest("a", "b")
     ac_u, ac_v = F.least("a", "c"), F.greatest("a", "c")
     bc_u, bc_v = F.col("b"), F.col("c")
@@ -3862,18 +3642,8 @@ def rich_club(
     join is the only wide operation; rows with ``N_k < 2`` are dropped
     (phi undefined).
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = stats_reset_checkpoint(
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = stats_reset_checkpoint(
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    e = _undirected(edges, src_col, dst_col, pin=stats_reset_checkpoint)
+    deg = stats_reset_checkpoint(_degrees(e, "d"))
     # distinct k values to profile = distinct degrees (phi changes only there)
     deg_hist = deg.groupBy("d").agg(F.count("*").alias("n_at"))
     # N_k = nodes with degree > k: suffix-cumulative count over the histogram
@@ -3946,17 +3716,8 @@ def eigenvector_centrality(
     is a 1-row aggregate broadcast back (the repo's standard guarded
     crossJoin); edge list and node frame materialize once.
     """
-    s, d = F.col(src_col), F.col(dst_col)
-    base = edges.select(s.alias("s"), d.alias("d"))
-    if symmetric:
-        base = base.unionAll(edges.select(d.alias("s"), s.alias("d")))
-    e = base.distinct().localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, symmetric=symmetric)
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     v = stats_reset_checkpoint(
         nodes.select("node", F.lit(scale).cast("long").alias("v"))
     )
@@ -4019,11 +3780,7 @@ def ppr_forward_push(
     """
     if not 0 < alpha_pct < 100:
         raise ValueError(f"alpha_pct must be in (0,100), got {alpha_pct}")
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col)
     outd = e.groupBy("s").agg(F.count("*").alias("od")).localCheckpoint(eager=False)
     state = stats_reset_checkpoint(
         seeds.select(F.col(node_col).alias("node"))
@@ -4091,19 +3848,10 @@ def salsa_scores(
     sums. Nodes with no in-edges hold authority 0, no out-edges hub 0
     (the bipartite-walk semantics, stated).
     """
-    e = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col)
     outd = e.groupBy("s").agg(F.count("*").alias("od")).localCheckpoint(eager=False)
     ind = e.groupBy("d").agg(F.count("*").alias("id_")).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionAll(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     hub = stats_reset_checkpoint(
         nodes.select("node", F.lit(scale).cast("long").alias("h"))
     )
@@ -4173,14 +3921,7 @@ def bootstrap_percolation(
     """
     if threshold < 1:
         raise ValueError(f"threshold must be >= 1, got {threshold}")
-    u, v = F.col(src_col), F.col(dst_col)
-    und = edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v")).where(
-        F.col("u") != F.col("v")
-    ).distinct()
-    e = (
-        und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False)
-    )
+    e = _mirrored(_undirected(edges, src_col, dst_col, pin=None))
     active = stats_reset_checkpoint(
         seeds.select(F.col(node_col).alias("node")).distinct().select(
             "node", F.lit(0).cast("long").alias("round")
@@ -4229,12 +3970,7 @@ def four_clique_counts(
     equi-joins on the checkpointed canonical edge list, exact integer
     counts only.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    e = stats_reset_checkpoint(
-        edges.select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _undirected(edges, src_col, dst_col, pin=stats_reset_checkpoint)
     e1 = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
     e3 = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -4303,21 +4039,11 @@ def ppr_sweep_cut(
     radius), the same documented bound as sampling.apportion_budget's
     key-table window.
     """
-    u, v = F.col(src_col).cast("string"), F.col(dst_col).cast("string")
-    und = (
-        edges.select(
-            F.least(u, v).alias("a"), F.greatest(u, v).alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(lambda d: stats_reset_checkpoint(d, eager=False))
+    und = _undirected(
+        edges, src_col, dst_col, cast="string",
+        pin=lambda d: stats_reset_checkpoint(d, eager=False),
     )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(und)
     cand = (
         scores.select(
             F.col(node_col).cast("string").alias("node"),
@@ -4344,11 +4070,11 @@ def ppr_sweep_cut(
         eager=False,
     )
     big = F.lit(1 << 62).cast("long")
-    r_a = ranked.select(F.col("node").alias("a"), F.col("rank").alias("_ra"))
-    r_b = ranked.select(F.col("node").alias("b"), F.col("rank").alias("_rb"))
+    r_u = ranked.select(F.col("node").alias("u"), F.col("rank").alias("_ra"))
+    r_v = ranked.select(F.col("node").alias("v"), F.col("rank").alias("_rb"))
     e2 = (
-        und.join(r_a, "a", "left")
-        .join(r_b, "b", "left")
+        und.join(r_u, "u", "left")
+        .join(r_v, "v", "left")
         .select(
             F.least(F.coalesce("_ra", big), F.coalesce("_rb", big)).alias("rmin"),
             F.greatest(F.coalesce("_ra", big), F.coalesce("_rb", big)).alias("rmax"),
@@ -4447,35 +4173,25 @@ def simrank_scores(
     Scores below ``min_score`` (post-division zeros) are dropped each
     round — the sparsity that keeps round k+1's join input small.
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    indeg = e.groupBy(F.col("v").alias("node")).agg(
+    e = _directed(edges, src_col, dst_col, loops=False)
+    indeg = e.groupBy(F.col("d").alias("node")).agg(
         F.count("*").alias("ind")
     )
-    outdeg = e.groupBy(F.col("u").alias("node")).agg(
+    outdeg = e.groupBy(F.col("s").alias("node")).agg(
         F.count("*").alias("outd")
     )
     # propagation adjacency: i -> a, only for i under the out-degree cap
     prop = (
         e.join(
             outdeg.where(F.col("outd") <= max_out_degree).select(
-                F.col("node").alias("u")
+                F.col("node").alias("s")
             ),
-            "u",
+            "s",
         )
-        .select(F.col("u").alias("i"), F.col("v").alias("a"))
+        .select(F.col("s").alias("i"), F.col("d").alias("a"))
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     diag = nodes.select(
         F.col("node").alias("pi"),
         F.col("node").alias("pj"),
@@ -4547,12 +4263,7 @@ def structural_twins(
     back to members. Classes below ``min_class_size`` drop (set it to 1
     to keep singletons).
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, loops=False)
     M = 2147483647
 
     def _profile(frame, node_col, nbr_col, tag, cnt):
@@ -4563,8 +4274,8 @@ def structural_twins(
             .alias(f"{tag}s2"),
             F.count("*").alias(cnt),  # 'onn'/'inn', not on/in: SQL keywords
         )
-    out_p = _profile(e, "u", "v", "o", "onn")
-    in_p = _profile(e, "v", "u", "i", "inn")
+    out_p = _profile(e, "s", "d", "o", "onn")
+    in_p = _profile(e, "d", "s", "i", "inn")
     prof = (
         out_p.join(in_p, "node", "full")
         .select(
@@ -4612,17 +4323,10 @@ def refex_features(
     means are sum/deg — derivable downstream where needed without
     sacrificing the engine-exact hash).
     """
-    e = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = e.select(F.col("u").alias("node")).unionAll(
-        e.select("v")
-    ).distinct()
-    od = e.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("od"))
-    ind = e.groupBy(F.col("v").alias("node")).agg(F.count("*").alias("ind"))
+    e = _directed(edges, src_col, dst_col, loops=False)
+    nodes = _nodes(e, "s", "d")
+    od = e.groupBy(F.col("s").alias("node")).agg(F.count("*").alias("od"))
+    ind = e.groupBy(F.col("d").alias("node")).agg(F.count("*").alias("ind"))
     feats = (
         nodes.join(od, "node", "left")
         .join(ind, "node", "left")
@@ -4637,13 +4341,13 @@ def refex_features(
     for _ in range(rounds):
         src_feats = feats.select(F.col("node"), *new_cols)
         osum = (
-            e.join(src_feats.withColumnRenamed("node", "v"), "v")
-            .groupBy(F.col("u").alias("node"))
+            e.join(src_feats.withColumnRenamed("node", "d"), "d")
+            .groupBy(F.col("s").alias("node"))
             .agg(*[F.sum(c).alias(f"os_{c}") for c in new_cols])
         )
         isum = (
-            e.join(src_feats.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("node"))
+            e.join(src_feats.withColumnRenamed("node", "s"), "s")
+            .groupBy(F.col("d").alias("node"))
             .agg(*[F.sum(c).alias(f"is_{c}") for c in new_cols])
         )
         minted = [f"os_{c}" for c in new_cols] + [f"is_{c}" for c in new_cols]
@@ -4691,14 +4395,7 @@ def propagate_labels(
     shrinks monotonically; plan reset per round via
     ``stats_reset_checkpoint`` like every iterative loop here.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(u.alias("a"), v.alias("b"))
-        .unionAll(edges.select(v.alias("a"), u.alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _directed(edges, src_col, dst_col, symmetric=True, loops=False)
     labeled = seeds.select(
         F.col(node_col).alias("node"),
         F.col(label_col).cast("string").alias("label"),
@@ -4707,12 +4404,12 @@ def propagate_labels(
     for r in range(1, rounds + 1):
         votes = (
             und.join(
-                labeled.select(F.col("node").alias("a"), "label"), "a"
+                labeled.select(F.col("node").alias("s"), "label"), "s"
             )
             .join(
-                labeled.select(F.col("node").alias("b")), "b", "left_anti"
+                labeled.select(F.col("node").alias("d")), "d", "left_anti"
             )
-            .groupBy(F.col("b").alias("node"), "label")
+            .groupBy(F.col("d").alias("node"), "label")
             .agg(F.count("*").alias("cnt"))
         )
         new = votes.groupBy("node").agg(
@@ -4755,28 +4452,18 @@ def onion_layers(
     ops; the state row broadcasts. Plans reset per round via
     ``stats_reset_checkpoint``.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    both = und.unionAll(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
-    rem = und.select(F.col("a").alias("node")).unionAll(
-        und.select("b")
-    ).distinct()
+    und = _undirected(edges, src_col, dst_col)
+    both = _mirrored(und)
+    rem = _nodes(und, "u", "v")
     spark = edges.sparkSession
     state = spark.createDataFrame([(1, 0)], ["k", "layer"])
     out = None
     for _ in range(rounds):
         live = (
-            both.join(rem.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(rem.withColumnRenamed("node", "b"), "b", "left_semi")
+            both.join(rem.withColumnRenamed("node", "u"), "u", "left_semi")
+            .join(rem.withColumnRenamed("node", "v"), "v", "left_semi")
         )
-        deg = live.groupBy(F.col("a").alias("node")).agg(
+        deg = live.groupBy(F.col("u").alias("node")).agg(
             F.count("*").alias("deg")
         )
         degged = rem.join(deg, "node", "left").select(
@@ -4836,15 +4523,7 @@ def bowtie_decomposition(
     visited-set-bounded state, the canonical iterative-graph shape;
     everything else is semi/anti joins against bounded label sets.
     """
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("s"),
-            F.col(dst_col).cast("string").alias("d"),
-        )
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _directed(edges, src_col, dst_col, loops=False, cast="string")
     scc = strongly_connected_components(
         e, src_col="s", dst_col="d", trim_rounds=scc_trim_rounds
     )

@@ -192,11 +192,18 @@ def pattern_triples(
     Union across patterns stays one pass per pattern (Catalyst does not
     currently fuse them; for dozens of patterns prefer one alternation
     regex with tagged relations).
+
+    Each match's groups are re-extracted from the isolated match string
+    (:func:`~ontoweaver_spark.textops.regex_match_structs`), which is only
+    equivalent for patterns that do not look outside their own match: a
+    pattern with a lookaround, a backreference or an unescaped ``$`` raises
+    ``ValueError`` naming the relation and the pattern.
     """
     from .textops import regex_match_structs
 
     outs = []
     for relation, regex in patterns:
+        _check_pattern(relation, regex)
         matches = regex_match_structs(
             F.col(text_col), regex, [("s", 1), ("o", 2)]
         )
@@ -215,3 +222,36 @@ def pattern_triples(
     for o in outs[1:]:
         result = result.unionByName(o)
     return result
+
+
+_LOOKAROUNDS = ("(?=", "(?!", "(?<=", "(?<!")
+
+
+def _check_pattern(relation: str, regex: str) -> None:
+    """Reject the regex constructs :func:`pattern_triples` cannot run
+    faithfully: lookarounds, backreferences (``\\1``, ``\\k<name>``) and
+    ``$``, outside character classes and escapes."""
+    found, i, in_class = None, 0, False
+    while i < len(regex) and found is None:
+        c = regex[i]
+        if c == "\\":
+            nxt = regex[i + 1:i + 2]
+            if not in_class and nxt and nxt in "123456789k":
+                found = f"backreference \\{nxt}"
+            i += 2
+            continue
+        if in_class:
+            in_class = c != "]"
+        elif c == "[":
+            in_class = True
+        elif c == "$":
+            found = "the $ anchor"
+        elif c == "(" and regex.startswith(_LOOKAROUNDS, i):
+            found = "a lookaround"
+        i += 1
+    if found:
+        raise ValueError(
+            f"pattern_triples: relation {relation!r} pattern {regex!r} uses {found}; "
+            "groups are re-read from the isolated match, so lookarounds, "
+            "backreferences and $ are not supported"
+        )

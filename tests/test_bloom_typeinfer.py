@@ -194,3 +194,26 @@ def test_pattern_triples_multi_match_and_no_match(spark):
         ("u1", "Bob", "works_at", "Initech"),
         ("u3", "Acme", "based_in", "Paris"),
     }
+
+
+@pytest.mark.parametrize(
+    "regex",
+    [
+        r"([A-Z]\w+) works at ([A-Z]\w+)(?=\.)",
+        r"([A-Z]\w+) works at (?!Initech)([A-Z]\w+)",
+        r"(?<=\. )([A-Z]\w+) works at ([A-Z]\w+)",
+        r"(?<!Bob )([A-Z]\w+) works at ([A-Z]\w+)",
+        r"([A-Z]\w+) works at ([A-Z]\w+) \1",
+        r"([A-Z]\w+) works at ([A-Z]\w+)$",
+    ],
+)
+def test_pattern_triples_rejects_context_dependent_regex(spark, regex):
+    """Groups are re-read from the isolated match, so a pattern that looks
+    outside it (lookaround, backreference, $) is refused up front, naming
+    the relation and the pattern."""
+    df = spark.createDataFrame([("u1", "Ada works at Acme.")], ["url", "text"])
+    with pytest.raises(ValueError, match="works_at") as err:
+        pattern_triples(df, [("based_in", r"(\w+) is based in (\w+)"), ("works_at", regex)])
+    assert repr(regex) in str(err.value)
+    # escaped and bracketed $ are literals, not anchors
+    assert pattern_triples(df, [("costs", r"(\w+) costs \$([\d$]+)")]).count() == 0

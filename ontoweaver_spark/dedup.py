@@ -297,9 +297,9 @@ def connected_components(
     compounding size estimates and the BigInteger digit count doubles per
     round (the loop dies at ~20 rounds no matter the data size; see the
     helper's docstring). Rounds run through ``session.fixpoint``:
-    convergence is its (count, hash-sum) probe, one aggregate per round
-    that also materializes the lazily checkpointed edge set; ``xxhash64``
-    is Spark-side only so no oracle sees it.
+    convergence is its (count, hash-sum) probe, observed on each round's
+    eager checkpoint of the edge set (no job of its own); ``xxhash64`` is
+    Spark-side only so no oracle sees it.
 
     Returns (vertex, component) where component = min vertex id in the
     component. Vertices appearing only in self-pairs are their own

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 from .textops import md5_int
-from .session import Converged, fixpoint, stats_reset_checkpoint
+from .session import Converged, checkpoint, fixpoint, stats_reset_checkpoint
 
 
 # ---- edge-input normalization --------------------------------------------
@@ -26,7 +26,7 @@ from .session import Converged, fixpoint, stats_reset_checkpoint
 
 
 def _lazy_pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False)
+    return checkpoint(df, eager=False, reset_stats=False)
 
 
 def _pinned(df: DataFrame, pin) -> DataFrame:
@@ -268,7 +268,7 @@ def pagerank_fixed_point(
     ranking use and a price identical in every engine.
 
     Scale shape: the edge list (deduped (src,dst)) and out-degrees
-    materialize ONCE (localCheckpoint — every iteration joins them);
+    materialize ONCE (checkpointed — every iteration joins them);
     each of the ``iterations`` rounds is one broadcast-free join keyed on
     src + one map-side-combinable sum keyed on dst — the canonical
     iterative-graph plan. Dangling nodes (no out-edges) keep receiving
@@ -294,7 +294,7 @@ def pagerank_fixed_point(
             )
             .groupBy("s", "d")
             .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=False)
+            .transform(_lazy_pin)
         )
         contrib = "rank * w DIV od"
     outd = e.groupBy("s").agg(
@@ -303,7 +303,7 @@ def pagerank_fixed_point(
     # out-degrees are loop-invariant: attach them to the edge list ONCE
     # and checkpoint, instead of re-paying an edge-list-sized join every
     # iteration (the edge frame is the big side of the loop)
-    e = e.join(outd, "s").localCheckpoint(eager=False)
+    e = e.join(outd, "s").transform(_lazy_pin)
     nodes = _nodes(e, "s", "d", pin=_lazy_pin)
     teleport = ((100 - damping_pct) * scale) // 100
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
@@ -377,13 +377,19 @@ def triangle_count(
     node never explodes: its edges are all oriented INTO it unless the
     neighbor is an even bigger hub.
     """
-    tri = _triangles(_undirected(edges, src_col, dst_col))
+    return _corner_counts(_undirected(edges, src_col, dst_col))
+
+
+def _corner_counts(e: DataFrame) -> DataFrame:
+    """``(node, triangles)`` of a canonical ``(u, v)`` list."""
+    tri = _triangles(e)
     corners = (
         tri.select(F.col("a").alias("node"))
         .unionAll(tri.select("b"))
         .unionAll(tri.select("c"))
     )
     return corners.groupBy("node").agg(F.count("*").alias("triangles"))
+
 
 def k_core(
     edges: DataFrame,
@@ -1631,15 +1637,16 @@ def clustering_coefficient(
     frontier hub scores near 0).
 
     Scale shape: triangles come from :func:`triangle_count`'s
-    degree-ordered wedge enumeration (out-adjacency bounded O(sqrt m));
-    degrees one count agg; the final join is node-keyed with the triangle
-    frame the (much) smaller side. Overflow: needs
-    ``2 * triangles * scale < 2^63`` per node — a node in 4.6e12/scale
-    triangles; document-graph safe at any realistic scale.
+    degree-ordered wedge enumeration (out-adjacency bounded O(sqrt m))
+    over the same pinned edge list as the degrees, one count agg; the
+    final join is node-keyed with the triangle frame the (much) smaller
+    side. Overflow: needs ``2 * triangles * scale < 2^63`` per node — a
+    node in 4.6e12/scale triangles; document-graph safe at any realistic
+    scale.
     """
     e = _undirected(edges, src_col, dst_col)
     deg = _degrees(e, "degree")
-    tri = triangle_count(e, src_col="u", dst_col="v")
+    tri = _corner_counts(e)
     return (
         deg.join(tri, "node", "left")
         .select(

@@ -229,8 +229,9 @@ _LOOKAROUNDS = ("(?=", "(?!", "(?<=", "(?<!")
 
 def _check_pattern(relation: str, regex: str) -> None:
     """Reject the regex constructs :func:`pattern_triples` cannot run
-    faithfully: lookarounds, backreferences (``\\1``, ``\\k<name>``) and
-    ``$``, outside character classes and escapes."""
+    faithfully: lookarounds, backreferences (``\\1``, ``\\k<name>``), word
+    boundaries (``\\b``, ``\\B``) and ``$``, outside character classes and
+    escapes."""
     found, i, in_class = None, 0, False
     while i < len(regex) and found is None:
         c = regex[i]
@@ -238,6 +239,8 @@ def _check_pattern(relation: str, regex: str) -> None:
             nxt = regex[i + 1:i + 2]
             if not in_class and nxt and nxt in "123456789k":
                 found = f"backreference \\{nxt}"
+            elif not in_class and nxt and nxt in "bB":
+                found = f"the word boundary \\{nxt}"
             i += 2
             continue
         if in_class:
@@ -253,5 +256,5 @@ def _check_pattern(relation: str, regex: str) -> None:
         raise ValueError(
             f"pattern_triples: relation {relation!r} pattern {regex!r} uses {found}; "
             "groups are re-read from the isolated match, so lookarounds, "
-            "backreferences and $ are not supported"
+            "backreferences, word boundaries and $ are not supported"
         )

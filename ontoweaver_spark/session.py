@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 from typing import NamedTuple
 
-from pyspark.sql import SparkSession, functions as F
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 ENGINE_CONF = {
     "spark.sql.ansi.enabled": "false",
@@ -28,7 +29,11 @@ ENGINE_CONF = {
     # graph adjacency, candidate pairs), where the sort adds nothing and
     # the hash build fits task memory. Both settings are size-gated by
     # Spark itself, so they scale: an over-threshold partition falls back
-    # to sort-merge exactly as before.
+    # to sort-merge exactly as before. A hash build cannot spill, so if a
+    # skewed build-side key slips past the size estimates at cluster
+    # scale, turn sort-merge back on without a code change:
+    # get_spark(extra_conf={"spark.sql.join.preferSortMergeJoin": "true"})
+    # at start, or spark.conf.set(...) with the same key on a live session.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
     # InferFiltersFromGenerate turns our explode(_edges) into a
@@ -73,9 +78,52 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def checkpoint(df, eager: bool = True, reset_stats: bool = True):
+    """``df.localCheckpoint(eager)``, re-wrapped so the plan above it keeps
+    what the checkpoint already knows about its rows.
+
+    When the checkpointed RDD has exactly one partition, the frame reports
+    ``SinglePartition``: every row sits in one task, so an aggregate, a
+    window or a union of such frames above it plans no exchange (a join
+    still re-shuffles both sides). That holds for any one-partition RDD,
+    whatever its size. A multi-partition
+    checkpoint reports ``UnknownPartitioning`` as before, so at cluster
+    scale the plans above it shuffle exactly as they did.
+
+    ``reset_stats`` drops the size estimate the checkpoint snapshots from
+    its child plan (see :func:`stats_reset_checkpoint`); otherwise it is
+    kept, as a plain ``localCheckpoint`` keeps it. Falls back to the plain
+    checkpointed frame if the private JVM hooks are unavailable (slower,
+    never wrong).
+    """
+    ck = df.localCheckpoint(eager=eager)
+    try:
+        plan = ck._jdf.logicalPlan()
+        single = plan.rdd().getNumPartitions() == 1
+        if not (single or reset_stats):
+            return ck
+        jvm = ck.sparkSession._jvm
+        physical = jvm.org.apache.spark.sql.catalyst.plans.physical
+        session, stats, constraints = (plan.otherCopyArgs().apply(i) for i in range(3))
+        if reset_stats:
+            stats = constraints = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+        fresh = plan.copy(
+            plan.output(), plan.rdd(),
+            getattr(getattr(physical, "SinglePartition$"), "MODULE$") if single
+            else physical.UnknownPartitioning(0),
+            plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+            session, stats, constraints,
+        )
+        if reset_stats:
+            fresh = fresh.newInstance()
+        return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, fresh), ck.sparkSession)
+    except (AttributeError, Py4JError):  # pragma: no cover - Connect / future-Spark fallback
+        return ck
+
+
 def stats_reset_checkpoint(df, eager: bool = True):
     """``localCheckpoint`` for ITERATIVE algorithms: truncate the plan AND
-    reset Catalyst's size estimate.
+    reset Catalyst's size estimate (:func:`checkpoint` with ``reset_stats``).
 
     ``df.localCheckpoint()`` truncates lineage, but the ``LogicalRDD`` it
     leaves behind SNAPSHOTS the child plan's *estimated* statistics. Size
@@ -89,31 +137,26 @@ def stats_reset_checkpoint(df, eager: bool = True):
 
     The fix re-wraps the checkpointed RDD of InternalRows as a fresh scan
     with default leaf statistics — zero recompute, zero serialization,
-    JVM-side only. Falls back to the plain checkpointed frame if the
-    private JVM hook is unavailable (slow at high round counts, never
-    wrong).
+    JVM-side only.
 
-    ``eager=False`` is not lazy under AQE (on in :func:`get_spark`):
-    building the checkpoint already runs every shuffle-map stage of the
-    plan, as a job of its own at call time (a ``groupBy().count()`` frame
-    submits one); only the final stage waits for the first action.
+    ``eager=False`` is not lazy under AQE (on in :func:`get_spark`) when
+    the state has several partitions: building the checkpoint already runs
+    every shuffle-map stage of the plan, as a job of its own at call time
+    (a ``groupBy().count()`` frame submits one); only the final stage waits
+    for the first action. An aggregate or a window over one-partition
+    state that reports ``SinglePartition`` plans no exchange, so such a
+    round has no map stage to run early (a join still re-shuffles both
+    sides up to ``spark.sql.shuffle.partitions``). ``SinglePartition`` can
+    only cost parallelism when a one-partition frame is large, and AQE
+    coalesces a shuffle into one partition only when the whole shuffle is
+    about ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB
+    by default, with ``parallelismFirst`` on) or smaller.
 
     Every capped iterative loop in this repo runs through :func:`fixpoint`:
     its probe mode checkpoints each round's state through this, and steps
     that checkpoint their own loop-carried state call it directly.
     """
-    from pyspark.sql import DataFrame as _DF
-
-    ck = df.localCheckpoint(eager=eager)
-    try:
-        spark = ck.sparkSession
-        jdf = ck._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        schema = jdf.queryExecution().analyzed().schema()
-        fresh = spark._jsparkSession.internalCreateDataFrame(jrdd, schema, False)
-        return _DF(fresh, spark)
-    except Exception:  # pragma: no cover - Connect / future-Spark fallback
-        return ck
+    return checkpoint(df, eager=eager, reset_stats=True)
 
 
 class Converged(NamedTuple):
@@ -149,34 +192,41 @@ def fixpoint(
       (for steps that test their INPUT, the last round's output is
       otherwise never tested).
     - ``probe`` (a column of a DataFrame state): each round's state is
-      checkpointed through :func:`stats_reset_checkpoint` with
-      ``eager=False`` (under AQE its shuffle-map stages run right there;
-      its final stage runs in the probe), and the ``(count, sum(probe))``
-      aggregate is compared with the previous round's. ``probe_start``
-      probes the incoming state too, so the first step may already be the
-      fixpoint.
+      checkpointed eagerly through :func:`stats_reset_checkpoint`, and
+      that checkpoint's job observes the ``(count, sum(probe))`` of its
+      rows (an ``Observation``, no job of its own); the pair is compared
+      with the previous round's. In exact mode the checkpoint is lazy and
+      nothing is observed. ``probe_start`` checkpoints and observes the
+      incoming state too, so the first step may already be the fixpoint.
 
     ``stats["rounds"]`` receives the number of steps run.
     """
 
-    def measure(df):
-        return tuple(df.agg(F.count("*"), F.sum(probe)).first())
+    def observed(df):
+        obs = Observation()
+        df = stats_reset_checkpoint(
+            df.observe(obs, F.count(F.lit(1)).alias("n"), F.sum(probe).alias("sum"))
+        )
+        return df, (obs.get["n"], obs.get["sum"])
 
     exact = exact_rounds is not None
-    prev = measure(state) if probe_start and not exact else None
+    prev = None
+    if probe_start and not exact:
+        state, prev = observed(state)
     converged, rounds = exact, 0  # exact mode never raises
     for rounds in range(1, (exact_rounds if exact else max_rounds) + 1):
         state = step(state, rounds)
         if isinstance(state, Converged):
             state, converged = state.state, True
             break
-        if probe is not None:
+        if probe is not None and exact:
             state = stats_reset_checkpoint(state, eager=False)
-            if not exact:
-                prev, last = measure(state), prev
-                if prev == last:
-                    converged = True
-                    break
+        elif probe is not None:
+            last = prev
+            state, prev = observed(state)
+            if prev == last:
+                converged = True
+                break
     if stats is not None:
         stats["rounds"] = rounds
     if not converged and error is not None and not (done is not None and done(state)):

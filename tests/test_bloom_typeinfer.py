@@ -205,15 +205,20 @@ def test_pattern_triples_multi_match_and_no_match(spark):
         r"(?<!Bob )([A-Z]\w+) works at ([A-Z]\w+)",
         r"([A-Z]\w+) works at ([A-Z]\w+) \1",
         r"([A-Z]\w+) works at ([A-Z]\w+)$",
+        r"\b([A-Z]\w+) works at ([A-Z]\w+)",
+        r"([A-Z]\w+) works at ([A-Z]\w+)\b",
+        r"([A-Z]\w+)\B works at ([A-Z]\w+)",
     ],
 )
 def test_pattern_triples_rejects_context_dependent_regex(spark, regex):
     """Groups are re-read from the isolated match, so a pattern that looks
-    outside it (lookaround, backreference, $) is refused up front, naming
-    the relation and the pattern."""
+    outside it (lookaround, backreference, word boundary, $) is refused up
+    front, naming the relation and the pattern."""
     df = spark.createDataFrame([("u1", "Ada works at Acme.")], ["url", "text"])
     with pytest.raises(ValueError, match="works_at") as err:
         pattern_triples(df, [("based_in", r"(\w+) is based in (\w+)"), ("works_at", regex)])
     assert repr(regex) in str(err.value)
     # escaped and bracketed $ are literals, not anchors
     assert pattern_triples(df, [("costs", r"(\w+) costs \$([\d$]+)")]).count() == 0
+    # an escaped backslash before b is a literal, not a word boundary
+    assert pattern_triples(df, [("path", r"(\w+)\\b(\w+)")]).count() == 0

@@ -174,8 +174,11 @@ _SUBPROP = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
 # replaced, on a local[4] session with 4 shuffle partitions. Job counts of
 # operators whose emptiness tests scan partitions lazily (coloring, MSF,
 # truss numbers, entailment) vary by one or two between runs; the pin is
-# the largest of seven runs. Each call takes (spark, stats) and returns
-# the operator's output frame.
+# the largest of seven runs. The pins of core_numbers and
+# connected_components are the lower counts since their one-partition loop
+# state plans no exchange under an aggregate and the probe became an
+# observation. Each call takes (spark, stats) and returns the operator's
+# output frame.
 CASES = [
     _case("k_core", lambda s, st: gs.k_core(_graph(s), k=3), 21, "e54a7e97dd11"),
     _case(
@@ -231,7 +234,7 @@ CASES = [
         lambda s, st: gs.temporal_reachability(_graph(s), _seeds(s, "a"), rounds=3),
         18, "e2c56dca869d",
     ),
-    _case("core_numbers", lambda s, st: gs.core_numbers(_graph(s)), 24, "c6775b74e2dd"),
+    _case("core_numbers", lambda s, st: gs.core_numbers(_graph(s)), 20, "c6775b74e2dd"),
     _case(
         "core_numbers_exact",
         lambda s, st: gs.core_numbers(_graph(s), exact_rounds=2), 20, "c6775b74e2dd",
@@ -259,7 +262,7 @@ CASES = [
     _case(
         "connected_components",
         lambda s, st: connected_components(_graph(s), a_col="src", b_col="dst", stats=st),
-        32, "cbdfdd7ec34e", 4,
+        12, "cbdfdd7ec34e", 4,
     ),
     _case(
         "subclass_closure",
@@ -306,9 +309,10 @@ CASES = [
 
 # The fixed-count link-analysis loops (no convergence test, so no rounds
 # in stats): output digest and job count as measured at the hand-built edge
-# lists the shared normalizers replaced, 5 of 5 runs equal.
+# lists the shared normalizers replaced, 5 of 5 runs equal; PageRank's pin
+# is its count since its edge list and node set are pinned as one partition.
 CASES += [
-    _case("pagerank_fixed_point", lambda s, st: gs.pagerank_fixed_point(_graph(s)), 36, "b8eed30ce3e8"),
+    _case("pagerank_fixed_point", lambda s, st: gs.pagerank_fixed_point(_graph(s)), 35, "b8eed30ce3e8"),
     _case(
         "personalized_pagerank",
         lambda s, st: gs.personalized_pagerank(_graph(s), _seeds(s, "a", "n")),
